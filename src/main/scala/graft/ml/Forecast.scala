@@ -2,7 +2,7 @@ package graft.ml
 
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.linalg.Vectors
-import org.apache.spark.ml.regression.{GBTRegressionModel, GBTRegressor, LinearRegression}
+import org.apache.spark.ml.regression.{GBTRegressionModel, GBTRegressor}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.Lags
@@ -12,9 +12,9 @@ import graft.ops.Lags
   *  - [[Arimax]] — ARIMA(p,d,q) with exogenous regressors via the
   *    Hannan–Rissanen two-stage regression (reference: statsmodels ARIMA
   *    order (3,1,4) + exog, `supervised/evaluation.ipynb#9`, params
-  *    `supervised/ARIMA_params.json:1`). Feature prep (lags, differencing)
-  *    is distributed column math; the two linear fits are MLlib
-  *    `LinearRegression`; only the O(p+q+d) forecast state is collected.
+  *    `supervised/ARIMA_params.json:1`). Like the reference, it fits one
+  *    bounded series in memory: one collect, then differencing, lags and
+  *    the two exact [[Ols]] fits over driver arrays.
   *  - [[RecursiveGbt]] — skforecast-style recursive autoregression
   *    (`src/scripts/optimization.py:124-128`, `xgb.ipynb#10`): MLlib
   *    `GBTRegressor` over lag/diff features, multi-step forecast feeding
@@ -22,9 +22,10 @@ import graft.ops.Lags
   *  - [[CvObjective]] — blocked time-series CV objective
   *    (`optimization.py:56-77`): per-fold fit+forecast MAE, mean/std.
   *
-  * Scale notes: model fitting is distributed through MLlib; the recursive
-  * forecast loop is inherently sequential per series and runs on the
-  * driver over a bounded state (lag buffer), never over the history.
+  * Scale notes: GBT fitting is distributed through MLlib; ARIMAX fits its
+  * bounded series on the driver; the recursive forecast loop is
+  * inherently sequential per series and runs on the driver over a bounded
+  * state (lag buffer), never over the history.
   */
 object Forecast {
 
@@ -118,91 +119,72 @@ object Arimax {
 
   /** Hannan–Rissanen fit: (1) long-AR regression estimates innovations as
     * residuals; (2) regression of the differenced target on p AR lags, q
-    * innovation lags, and exog. Both stages are MLlib LinearRegression
-    * over distributed lag features; only O(p+q+d) state is collected.
+    * innovation lags, and exog. Both stages are exact [[Ols]] fits.
+    *
+    * The input is ONE bounded series (the contract [[Forecast.pinSmall]]
+    * states; per-group scale-out is out of scope here). It is collected
+    * once and fit on the driver, following the window formulation: rows
+    * ascending by `dateCol`, nulls first; target and exog as doubles;
+    * differencing drops null (not NaN) differences; each stage drops rows
+    * with a null or NaN target or lag; a null or NaN exog value only
+    * drops out of the moment sums.
     */
   def fit(series: DataFrame, dateCol: String, targetCol: String,
           exogCols: Seq[String], p: Int, d: Int, q: Int): ArimaxModel = {
     require(p >= 1, "need p >= 1")
-    val order = Seq(dateCol)
-    val (pinned, ownPin) = Forecast.pinSmall(series)
-    val diffed = Forecast.differenced(pinned, targetCol, order, d, "__y")
+    val rows = series
+      .select(col(dateCol) +: (targetCol +: exogCols).map(c => col(c).cast("double")): _*)
+      .collect().sortBy(_.get(0))(ascNullsFirst)
+    def dbl(r: org.apache.spark.sql.Row, i: Int): Option[Double] =
+      if (r.isNullAt(i)) None else Some(r.getDouble(i))
+    // levels(j) = the j-th difference; None is null (only a null operand
+    // makes a difference null)
+    val levels = Iterator.iterate(rows.map(dbl(_, 1))) { x =>
+      Array.tabulate(x.length)(i =>
+        if (i == 0) None else for (a <- x(i); b <- x(i - 1)) yield a - b)
+    }.take(d + 1).toArray
+    val kept = levels(0).indices.filter(i => d == 0 || levels(d)(i).isDefined).toArray
+    val y = kept.map(i => levels(d)(i).getOrElse(Double.NaN))
+    def yLags(i: Int, k: Int) = Array.tabulate(k)(l => y(i - 1 - l))
 
     // ---- stage 1: long AR (order m) for innovation estimates ----
-    // One-pass exact normal-equations fit (Ols): no per-iteration MLlib
-    // jobs, and the coefficients are partition-invariant (decimal-exact
-    // moment sums), so every downstream forecast is bit-deterministic.
     val m = math.max(p + q, p) + 2
-    val arLags = (1 to m).map(k => s"__y_lag$k")
-    val stage1 = Lags.withLags(diffed, "__y", order, 1 to m)
-      .na.drop(arLags :+ "__y")
-    val m1 = Ols.fit(stage1, "__y", arLags)
-    val withResid = stage1
-      .withColumn("__e", col("__y") - m1.predictExpr(arLags))
+    val s1 = (m until y.length).filter(i => (i - m to i).forall(k => !y(k).isNaN)).toArray
+    val m1 = Ols.fit(s1.map(yLags(_, m)), s1.map(y))
+    val e = s1.map(i => y(i) - m1.predict(yLags(i, m)))
 
     // ---- stage 2: y ~ p AR lags + q innovation lags + exog ----
-    val pLags = (1 to p).map(k => s"__y_lag$k")
-    val eLags = (1 to q).map(k => s"__e_lag$k")
-    val stage2 = Lags.withLags(withResid, "__e", order, 1 to math.max(q, 1))
-      .na.drop(pLags ++ eLags :+ "__y")
-    val feats = pLags ++ eLags ++ exogCols
+    val s2 = s1.indices.filter(s => s >= q && (1 to q).forall(k => !e(s - k).isNaN)).toArray
     val m2 = Ols.fit(
-      exogCols.foldLeft(stage2)((df, c) => df.withColumn(c, col(c).cast("double"))),
-      "__y", feats)
+      s2.map { s =>
+        val r = rows(kept(s1(s)))
+        yLags(s1(s), p) ++ Array.tabulate(q)(k => e(s - 1 - k)) ++
+          exogCols.indices.map(c => dbl(r, c + 2).getOrElse(Double.NaN))
+      },
+      s2.map(s => y(s1(s))))
 
     val w = m2.coefs
     val phi = w.slice(0, p)
     val theta = w.slice(p, p + q)
     val beta = w.slice(p + q, p + q + exogCols.length)
 
-    // ---- bounded forecast state: ONE tail collect ----
-    // The last-p diffs, last-q residuals, and the d+1 integration levels
-    // all derive from the last max(p, q, d+1) rows of the stage-1 frame
-    // (its na.drop removes only EARLY rows, so its tail is the series
-    // tail). The j-th-difference level replays withDiff's iterated
-    // e − lag(e) fold on the collected raw values — identical doubles —
-    // and 3 + d sequential driver jobs per fit collapse into one.
-    val kTail = math.max(math.max(p, q), d + 1)
-    val tailRows = withResid
-      .orderBy(order.map(c => col(c).desc): _*)
-      .select(col("__y").cast("double"), col("__e").cast("double"),
-        col(targetCol).cast("double"))
-      .limit(kTail).collect().reverse
-    val (lastDiffs, lastResiduals, diffState) =
-      if (tailRows.length >= kTail) {
-        val ds = new Array[Double](d + 1)
-        var lv = tailRows.map(_.getDouble(2)).takeRight(d + 1)
-        ds(0) = lv.last
-        for (j <- 1 to d) {
-          lv = lv.sliding(2).map(w => w(1) - w(0)).toArray
-          ds(j) = lv.last
-        }
-        (tailRows.map(_.getDouble(0)).takeRight(p),
-          if (q == 0) Array.empty[Double]
-          else tailRows.map(_.getDouble(1)).takeRight(q),
-          ds)
-      } else {
-        // tiny-series fallback: stage-1's lag drop consumed the tail
-        // window, so withResid is shorter than kTail — collect from the
-        // wider frames instead (extra bounded jobs; cold path only)
-        val ld = Forecast.tail(diffed, "__y", order, p)
-        val lr = if (q == 0) Array.empty[Double]
-          else Forecast.tail(withResid, "__e", order, q)
-        val ds = new Array[Double](d + 1)
-        ds(0) = Forecast.tail(
-          pinned.withColumn("__l0", col(targetCol).cast("double")),
-          "__l0", order, 1).head
-        for (j <- 1 to d) {
-          val cj = Lags.withDiff(pinned, targetCol, order, j, s"__l$j")
-          ds(j) = Forecast.tail(
-            cj.filter(col(s"__l$j").isNotNull), s"__l$j", order, 1).head
-        }
-        (ld, lr, ds)
-      }
-    if (ownPin) pinned.unpersist()
+    // ---- bounded forecast state ----
+    // The last-p diffs and the d+1 integration levels come from the series
+    // tail; the last-q residuals from the stage-1 rows (their na.drop
+    // removes only EARLY rows of a gap-free series).
+    val lastDiffs = y.takeRight(p)
+    val diffState = levels.map(_.flatten.last)
     ArimaxModel(p, d, q, phi, theta, beta, m2.intercept,
-      lastDiffs, lastResiduals, diffState)
+      lastDiffs, e.takeRight(q), diffState)
   }
+
+  /** A window's ascending order: nulls first, then the values' natural
+    * order (stable, so equal keys keep their collected order).
+    */
+  private val ascNullsFirst: Ordering[Any] = (a, b) =>
+    if (a == null) (if (b == null) 0 else -1)
+    else if (b == null) 1
+    else a.asInstanceOf[Comparable[Any]].compareTo(b)
 }
 
 /** Fitted recursive GBT forecaster (skforecast ForecasterAutoreg analog). */

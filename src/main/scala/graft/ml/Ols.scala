@@ -1,18 +1,18 @@
 package graft.ml
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.Decimal
 
-/** Exact ridge-OLS via the normal equations, as ONE distributed aggregate:
-  * decimal-exact sums of every moment (X'X upper triangle, X'y, column
-  * sums, n) in a single pass over the data, then a d×d solve on the
-  * driver (d = feature count, bounded by the model — never by rows).
+/** Exact ridge-OLS via the normal equations over driver arrays (the
+  * bounded series [[Arimax.fit]] collects): decimal-exact sums of every
+  * moment (X'X upper triangle, X'y, column sums, n), then a d×d solve
+  * (d = feature count, bounded by the model — never by rows).
   *
-  * Compared to an iterative fit this is the scalable shape for small d:
-  * one job, map-side partial aggregation, no per-iteration scheduling.
-  * Decimal capture makes the moments — and therefore the coefficients —
-  * bit-identical under any partitioning (MLlib's solvers sum doubles in
-  * partition order and drift in the low bits).
+  * Each moment term is cast to decimal(38,12) and summed with Spark's own
+  * `Decimal`, the arithmetic of `sum(CAST(term AS DECIMAL(38, 12)))`, so
+  * the coefficients are bit-identical under any row order (summing
+  * doubles drifts in the low bits). A non-finite term (NaN regressor,
+  * overflowed product) is skipped like that cast's null; a term or sum
+  * outside decimal(38,12) throws, as under ANSI mode.
   *
   * Mirrors the reference's statsmodels/sklearn linear stages (SURVEY §2.9
   * M11 Hannan–Rissanen regressions) without per-fit MLlib overhead.
@@ -20,52 +20,54 @@ import org.apache.spark.sql.functions._
 object Ols {
 
   final case class Model(coefs: Array[Double], intercept: Double) {
-    def predictExpr(xCols: Seq[String]): org.apache.spark.sql.Column =
-      xCols.zip(coefs).foldLeft(lit(intercept)) { case (acc, (c, b)) =>
-        acc + col(c).cast("double") * lit(b)
-      }
+    /** intercept + Σ x_i·b_i, added left to right. */
+    def predict(x: Array[Double]): Double =
+      coefs.indices.foldLeft(intercept)((acc, i) => acc + x(i) * coefs(i))
   }
 
-  /** Fit y ~ xCols + intercept with L2 penalty `ridge` on the non-intercept
-    * coefficients (matching a small LinearRegression regParam used purely
-    * for numerical stability).
+  /** Fit y ~ x + intercept (x row-major: one row of d regressors per
+    * observation; a missing regressor is NaN) with L2 penalty `ridge` on
+    * the non-intercept coefficients (matching a small LinearRegression
+    * regParam used purely for numerical stability).
     */
-  def fit(df: DataFrame, yCol: String, xCols: Seq[String],
-          ridge: Double = 1e-6): Model = {
-    val d = xCols.length
+  def fit(x: Array[Array[Double]], y: Array[Double], ridge: Double = 1e-6): Model = {
+    require(x.nonEmpty && x.length == y.length,
+      s"need matching non-empty rows, got ${x.length} x and ${y.length} y")
+    val d = x.head.length
     require(d >= 1, "need at least one feature")
-    val xs = xCols.map(c => col(c).cast("double"))
-    val y = col(yCol).cast("double")
-    // scale-12 capture (vs Exact's scale-6 reporting grid): moment sums
-    // feed a linear solve, where grid error amplifies through the inverse
-    val dsum = (c: org.apache.spark.sql.Column) =>
-      sum(c.cast(org.apache.spark.sql.types.DecimalType(38, 12))).cast("double")
-    val aggs =
-      (for (i <- 0 until d; j <- i until d) yield
-        dsum(xs(i) * xs(j)).as(s"xx_${i}_$j")) ++
-      (0 until d).map(i => dsum(xs(i) * y).as(s"xy_$i")) ++
-      (0 until d).map(i => dsum(xs(i)).as(s"xs_$i")) :+
-      dsum(y).as("ys") :+ count(lit(1)).as("n")
-    val r = df.agg(aggs.head, aggs.tail: _*).head()
-    def g(name: String): Double = r.getDouble(r.fieldIndex(name))
-    val n = r.getLong(r.fieldIndex("n")).toDouble
+    val n = x.length
     // Augmented system over [x_1..x_d, 1]
     val m = d + 1
     val a = Array.ofDim[Double](m, m)
     val b = new Array[Double](m)
     for (i <- 0 until d; j <- i until d) {
-      val v = g(s"xx_${i}_$j"); a(i)(j) = v; a(j)(i) = v
+      val v = dsum(n)(r => x(r)(i) * x(r)(j)); a(i)(j) = v; a(j)(i) = v
     }
     for (i <- 0 until d) {
-      a(i)(d) = g(s"xs_$i"); a(d)(i) = a(i)(d)
-      b(i) = g(s"xy_$i")
+      a(i)(d) = dsum(n)(r => x(r)(i)); a(d)(i) = a(i)(d)
+      b(i) = dsum(n)(r => x(r)(i) * y(r))
       a(i)(i) += ridge
     }
     a(d)(d) = n
-    b(d) = g("ys")
+    b(d) = dsum(n)(y(_))
     val sol = solve(a, b)
     Model(sol.take(d), sol(d))
   }
+
+  /** Σ over rows 0 until n of `term` cast to decimal(38,12), as a double.
+    * Scale 12 (vs Exact's scale-6 reporting grid): moment sums feed a
+    * linear solve, where grid error amplifies through the inverse.
+    */
+  private def dsum(n: Int)(term: Int => Double): Double = {
+    val terms = (0 until n).iterator.map(term)
+      .filter(java.lang.Double.isFinite).map(v => dec38(Decimal(v)))
+    require(terms.hasNext, "no finite term in a moment sum")
+    dec38(terms.reduce(_ + _)).toDouble
+  }
+
+  private def dec38(v: Decimal): Decimal =
+    if (v.changePrecision(38, 12)) v
+    else throw new ArithmeticException(s"$v cannot be represented as decimal(38,12)")
 
   /** Gaussian elimination with partial pivoting (driver-side, m ≤ ~100s). */
   private[ml] def solve(a0: Array[Array[Double]], b0: Array[Double]): Array[Double] = {

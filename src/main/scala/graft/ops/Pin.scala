@@ -35,18 +35,5 @@ object Pin {
       val cached = df.persist()
       try cached.checkpoint()
       finally cached.unpersist()
-    } else if (sys.env.get("SPARK_GRAFT_PIN_LEVEL").contains("ser")) {
-      // MEASUREMENT KNOB ONLY (VERDICT r15 item 7 / r16 item 5): the
-      // classifier decade's 1M-doc pin holds a ~60M-row deserialized
-      // occurrence frame, and its same-code wall spread was suspected
-      // to be GC pressure from those boxed blocks. `ser` pins via an
-      // eager serialized persist instead of localCheckpoint so the A/B
-      // isolates block REPRESENTATION (boxed rows vs serialized bytes)
-      // with the same eager materialization. Not a deployment mode —
-      // lineage is NOT truncated here, which is pin's actual contract.
-      import org.apache.spark.storage.StorageLevel
-      val cached = df.persist(StorageLevel.MEMORY_AND_DISK_SER)
-      cached.count()
-      cached
     } else df.localCheckpoint()
 }

@@ -13,19 +13,127 @@ class MlSpec extends AnyFunSuite {
 
   test("Ols.fit recovers exact coefficients on noiseless data") {
     import graft.ml.Ols
-    val rows = (1 to 50).map { i =>
-      val x1 = i.toDouble; val x2 = math.sin(i * 0.3)
-      (x1, x2, 2.5 * x1 - 4.0 * x2 + 7.0)
-    }
-    val df = rows.toDF("x1", "x2", "y")
-    val m = Ols.fit(df, "y", Seq("x1", "x2"), ridge = 0.0)
+    val x = (1 to 50).map(i => Array(i.toDouble, math.sin(i * 0.3))).toArray
+    val y = x.map(r => 2.5 * r(0) - 4.0 * r(1) + 7.0)
+    val m = Ols.fit(x, y, ridge = 0.0)
     assert(math.abs(m.coefs(0) - 2.5) < 1e-9, m.coefs.mkString(","))
     assert(math.abs(m.coefs(1) + 4.0) < 1e-9)
     assert(math.abs(m.intercept - 7.0) < 1e-8)
-    // partition-invariance of the exact moments
-    val m2 = Ols.fit(df.repartition(7), "y", Seq("x1", "x2"), ridge = 0.0)
+    // row-order invariance of the exact moments
+    val perm = new scala.util.Random(7L).shuffle(x.indices.toList).toArray
+    val m2 = Ols.fit(perm.map(x), perm.map(y), ridge = 0.0)
     assert(m.coefs.toSeq === m2.coefs.toSeq)
     assert(m.intercept === m2.intercept)
+    // ... and of the whole ARIMAX fit under any partitioning of its input
+    val df = (0 until 120).map(i => (i, 50.0 + math.sin(i * 0.4) * 3 + i / 8.0, math.cos(i * 0.7)))
+      .toDF("t", "y", "x")
+    val a1 = Arimax.fit(df, "t", "y", Seq("x"), p = 2, d = 1, q = 1)
+    val a7 = Arimax.fit(df.repartition(7), "t", "y", Seq("x"), p = 2, d = 1, q = 1)
+    assert(modelBits(a1) === modelBits(a7))
+  }
+
+  /** Every fitted field as raw IEEE bits: phi, theta, beta, intercept,
+    * lastDiffs, lastResiduals, diffState.
+    */
+  private def modelBits(m: graft.ml.ArimaxModel): Seq[Seq[Long]] =
+    Seq(m.phi, m.theta, m.beta, Array(m.intercept), m.lastDiffs,
+      m.lastResiduals, m.diffState).map(_.map(java.lang.Double.doubleToLongBits).toSeq)
+
+  private def pinnedFits: Seq[(String, graft.ml.ArimaxModel)] = {
+    import org.apache.spark.sql.functions.col
+    val split = graft.ts.Pinned.splitLong
+    val base = graft.ts.Pinned.arimaxSeries
+    val ex = graft.ts.Pinned.exogSeries
+    val plain = base.indices.map(i => (i, base(i))).toDF("day", "val")
+      .filter(col("day") < split)
+    val withX = base.indices.map(i => (i, base(i) + 2 * ex(i), ex(i)))
+      .toDF("day", "val", "x1").filter(col("day") < split)
+    // interior null and NaN in the target and the exog: pins the
+    // differencing filter (null only), the na.drop rules (null or NaN)
+    // and the moment sums skipping null and NaN terms
+    val holes = base.indices.map { i =>
+      val v = base(i) + 2 * ex(i)
+      (i, if (i == 50) None else if (i == 90) Some(Double.NaN) else Some(v),
+        if (i == 120) None else if (i == 130) Some(Double.NaN) else Some(ex(i)))
+    }.toDF("day", "val", "x1").filter(col("day") < split)
+    Seq(
+      "q49 (2,1,1)" -> Arimax.fit(plain, "day", "val", Nil, p = 2, d = 1, q = 1),
+      "(3,1,4)+exog" -> Arimax.fit(withX, "day", "val", Seq("x1"), p = 3, d = 1, q = 4),
+      "d=2 (2,2,1)" -> Arimax.fit(plain, "day", "val", Nil, p = 2, d = 2, q = 1),
+      // 12 points: stage 1 keeps 3 rows < max(p, q, d+1) = 4, the
+      // short-series tail path
+      "tiny (4,2,1)" -> Arimax.fit(plain.filter(col("day") < 12), "day", "val", Nil,
+        p = 4, d = 2, q = 1),
+      "holes (2,1,1)+exog" -> Arimax.fit(holes, "day", "val", Seq("x1"), p = 2, d = 1, q = 1),
+      "holes (2,0,1)+exog" -> Arimax.fit(holes, "day", "val", Seq("x1"), p = 2, d = 0, q = 1))
+  }
+
+  /** Recorded from the window-and-aggregate Spark fit; any rewrite of the
+    * fit must reproduce them bit for bit. Field order as in [[modelBits]].
+    */
+  private val pinnedBits: Map[String, Seq[Seq[Long]]] = Map(
+    "q49 (2,1,1)" -> Seq(
+      Seq(0x3fd8d1d46b555f53L, 0xbfc2908237edff9cL),
+      Seq(0xbff2d97fc5d37ea3L),
+      Seq(),
+      Seq(0x3fa46631a11e617cL),
+      Seq(0xbfee000000000000L, 0xc027600000000000L),
+      Seq(0xc022abd1450097bcL),
+      Seq(0x406e3e0000000000L, 0xc027600000000000L)),
+    "(3,1,4)+exog" -> Seq(
+      Seq(0x3fd40799eb32a237L, 0xbfdfd47262b8f319L, 0xbfc17f898f8f7eabL),
+      Seq(0xbffe9979298b4b60L, 0x3ffcde7952dbbe05L, 0xbfdbf3582b25ec5cL, 0x3fa41528d964026aL),
+      Seq(0x400935a1596c0d55L),
+      Seq(0xc0277f3df73a75eaL),
+      Seq(0xc017c00000000000L, 0xc017c00000000000L, 0xbff7000000000000L),
+      Seq(0x40152fa146fbf22eL, 0x40000531d8f9d0d0L, 0x4009473dc3733938L, 0x3ff274f2b59d7ad4L),
+      Seq(0x406ff60000000000L, 0xbff7000000000000L)),
+    "d=2 (2,2,1)" -> Seq(
+      Seq(0xbfcf0f37875fff50L, 0xbfbdbe7e2b64dc09L),
+      Seq(0xbfe7bded4620b5d6L),
+      Seq(),
+      Seq(0x3fc200b10f7edc7cL),
+      Seq(0x0000000000000000L, 0xc025800000000000L),
+      Seq(0xc0383102aed55f74L),
+      Seq(0x406e3e0000000000L, 0xc027600000000000L, 0xc025800000000000L)),
+    "tiny (4,2,1)" -> Seq(
+      Seq(0xbfc41dfbb0ab3830L, 0xbfa1d5f7ef09cc95L, 0x3fcd08f7c5e0b541L, 0xbfa1d5f6875ca763L),
+      Seq(0x3ed5888c8d5120a3L),
+      Seq(),
+      Seq(0xc0283fffd6609690L),
+      Seq(0x4041800000000000L, 0x4038400000000000L, 0xc038400000000000L, 0x0000000000000000L),
+      Seq(0x3e199afe60000000L),
+      Seq(0x406c6e0000000000L, 0xbfee000000000000L, 0x0000000000000000L)),
+    "holes (2,1,1)+exog" -> Seq(
+      Seq(0x3fdca7f439b19712L, 0x3f434caa482f5e5cL),
+      Seq(0xbff58c3ab53a07cdL),
+      Seq(0x400a79e5ee9444b2L),
+      Seq(0xc02833c943e989acL),
+      Seq(0xc017c00000000000L, 0xbff7000000000000L),
+      Seq(0xbfdeb762ffc9d980L),
+      Seq(0x406ff60000000000L, 0xbff7000000000000L)),
+    "holes (2,0,1)+exog" -> Seq(
+      Seq(0xbfc980ee99c26814L, 0xbfa149fc93a90929L),
+      Seq(0x3fdf89c062926d57L),
+      Seq(0x3ffa34b0e40289c9L),
+      Seq(0x40726867eded1394L),
+      Seq(0x4070120000000000L, 0x406ff60000000000L),
+      Seq(0x40222977dc536090L),
+      Seq(0x406ff60000000000L)))
+
+  test("ARIMAX fit is pinned bit-exactly on fixed fixtures") {
+    val fits = pinnedFits
+    assert(fits.map(_._1).toSet === pinnedBits.keySet)
+    fits.foreach { case (name, m) =>
+      assert(modelBits(m) === pinnedBits(name), name)
+    }
+  }
+
+  test("ARIMAX fit fails loudly when a moment term leaves decimal(38,12)") {
+    import org.apache.spark.sql.functions.{col, lit, when}
+    val df = (0 until 40).map(i => (i, 100.0 + (i * 37) % 11, i.toDouble)).toDF("t", "y", "x")
+      .withColumn("x", when(col("t") === 30, lit(1e27)).otherwise(col("x")))
+    intercept[ArithmeticException](Arimax.fit(df, "t", "y", Seq("x"), p = 1, d = 0, q = 0))
   }
 
   test("integrate() inverts differencing at d=1 and d=2") {
