@@ -51,7 +51,6 @@ object Tables {
     * the few heavy consumers gain (measured: the documents fan-out
     * moved q120 3.2→1.8 s and q201 2.8→1.9 s while a lineitem/events
     * fan-out read flat-to-negative on q01/q53/q144).
-    * `SPARK_GRAFT_SCAN_FANOUT=0` disables (measurement knob).
     *
     * Also applied per-query by the handful of RELATIONAL queries whose
     * per-row work is heavy enough to beat the exchange (q12's 4-way
@@ -61,8 +60,7 @@ object Tables {
     */
   def fanOutScan(spark: SparkSession, df: DataFrame): DataFrame = {
     val want = spark.sparkContext.defaultParallelism
-    val enabled = !sys.env.get("SPARK_GRAFT_SCAN_FANOUT").contains("0")
-    if (enabled && df.rdd.getNumPartitions < want) df.repartition(want)
+    if (df.rdd.getNumPartitions < want) df.repartition(want)
     else df
   }
 

@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import graft.text.TextOps
 
 /** Deduplication for large-scale corpus curation: exact, MinHash+LSH,
@@ -104,22 +105,12 @@ object Dedup {
     * (~4-6× slower at corpus scale). Tokens are exploded once and each
     * shingle is a `concat_ws` over `lead` windows partitioned by doc —
     * one hash shuffle on the doc id (even distribution at any scale),
-    * then a distinct.
+    * then a distinct. This is the relational form, for consumers that
+    * join or group on shingles ([[jaccardPairs]], [[minhashSignatures]]);
+    * the md5 MinHash family builds the same shingles per document
+    * instead ([[graft.functions.Shingles]]).
     */
-  def shingleRows(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    shingleRowsRaw(df, idCol, textCol, n).distinct()
-
-  /** [[shingleRows]] WITHOUT the final distinct — one (id, shingle) row
-    * per token POSITION, so a shingle occurring k times in a doc appears
-    * k times. Correct (and one full-stream exchange cheaper) for any
-    * consumer invariant under per-doc shingle multiplicity — the MinHash
-    * signature paths: min(h⊕c) over the multiset equals min over the
-    * distinct set (round-20 measurement: the distinct was ~25% of the
-    * q79 signature pipeline). Set-semantics consumers (Jaccard counts)
-    * keep using [[shingleRows]].
-    */
-  private[graft] def shingleRowsRaw(df: DataFrame, idCol: String,
-                                    textCol: String, n: Int): DataFrame = {
+  def shingleRows(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
     val toks = df.select(col(idCol).as("id"),
       TextOps.tokens(coalesce(col(textCol), lit(""))).as("t"))
     val short = toks.filter(size(col("t")) < n)
@@ -133,7 +124,7 @@ object Dedup {
       .withColumn("s", concat_ws(" ", parts: _*))
       .filter(col("p") <= col("len") - n)
       .select("id", "s")
-    full.union(short)
+    full.union(short).distinct()
   }
 
   /** Distinct 64-bit identities of word n-gram shingles: tokens are
@@ -315,9 +306,7 @@ object Dedup {
     * composition as the portable reference, pinned equal by DedupSpec.
     */
   def md5Hash64(c: Column): Column =
-    org.apache.spark.sql.graft.Bridge.column(
-      graft.functions.Md5Hash64(
-        org.apache.spark.sql.graft.Bridge.expression(c.cast("binary"))))
+    Bridge.column(graft.functions.Md5Hash64(Bridge.expression(c.cast("binary"))))
 
   /** Declarative reference form of [[md5Hash64]]: first 16 hex chars of
     * md5 assembled via conv + shiftleft (shiftleft wraps, which bitwise
@@ -563,55 +552,53 @@ object Dedup {
     * `"graft-minhash#" + i` — a bijective per-family permutation with no
     * modular arithmetic, so any engine with md5 and xor replicates every
     * min bit-for-bit (the production near-dup path keeps the faster
-    * xxhash64 family in [[minhashSignatures]]). Docs with no shingle rows
-    * (null text) keep their nHashes rows with null minhash via the final
-    * left join.
+    * xxhash64 family in [[minhashSignatures]]). Docs with null text
+    * keep their nHashes rows with null minhash via the final left join.
     *
-    * Scale shape: one md5 per shingle; the × nHashes blow-up is a cheap
-    * xor that collapses map-side (the groupBy's partial min leaves
-    * ≤ nHashes rows per id per partition before the shuffle), so shuffle
-    * volume is bounded by ids × nHashes, never by shingle count.
+    * Scale shape: one md5 per shingle position and the nHashes xors, all
+    * inside the per-document projection of [[minhashSigArrayMd5]]; each
+    * (id, h_idx) row then reads its slot of the joined signature. No
+    * generator sits over the signature: Spark infers a `size(sig) > 0`
+    * filter under an explode of an attribute and pushes it through the
+    * projection, which evaluated every signature twice.
     */
   def minhashTableMd5(df: DataFrame, idCol: String, textCol: String,
                       nHashes: Int = 16, shingleSize: Int = 3): DataFrame = {
     val sig = minhashSigArrayMd5(df, idCol, textCol, nHashes, shingleSize)
-      .select(col("id"), posexplode(col("sig")).as(Seq("h_idx", "minhash")))
-      .withColumn("h_idx", col("h_idx").cast("long"))
     val idx = broadcast(df.sparkSession.range(nHashes).toDF("h_idx"))
     df.select(col(idCol).as("id")).crossJoin(idx)
-      .join(sig, Seq("id", "h_idx"), "left")
-      .select(col("id").as(idCol), col("h_idx"), col("minhash"))
+      .join(sig, Seq("id"), "left")
+      .select(col("id").as(idCol), col("h_idx"),
+        element_at(col("sig"), (col("h_idx") + 1).cast("int")).as("minhash"))
   }
 
   /** (id, sig: array<long> of length nHashes) — the md5-family MinHash
-    * signature of every non-null-text doc, as ONE groupBy(id) with
-    * nHashes `min` aggregates over the NON-DISTINCT shingle stream
-    * ([[shingleRowsRaw]] — min is multiplicity-invariant). Value-wise
-    * sig[i] = the long-form minhash at h_idx i ([[minhashTableMd5]]
-    * posexplodes exactly this array, so the two forms cannot drift).
+    * signature of every non-null-text doc: sig[i] = min over the doc's
+    * shingles of md5Hash64(shingle) XOR c_i. Value-wise sig[i] = the
+    * long-form minhash at h_idx i ([[minhashTableMd5]] posexplodes
+    * exactly this array, so the two forms cannot drift).
     *
-    * Plan shape vs the round-19 long form (q79 plan audit, round 20):
-    * the (id, shingle) distinct exchange is GONE, the ×nHashes
-    * posexplode row blowup is GONE (each row computes the nHashes xors
-    * in one projection), and the remaining exchange after the
-    * shingle window carries ≤|ids| partially-aggregated rows instead of
-    * |ids|×nHashes — 3 full-stream exchanges down to 1 (+1 bounded).
+    * Plan shape: ONE projection over the scan. The native
+    * [[graft.functions.ShingleMinHashMd5]] builds the doc's shingles from
+    * its token array and folds them into the signature in the same row,
+    * so there is no posexplode, no `lead` window, no exchange and no
+    * nHashes-way `min` aggregate (the round-20 form ran all four over one
+    * row per shingle position). TextDedupSpec checks this plan directly:
+    * the callers' pins hide it from their final plans.
     */
   private[graft] def minhashSigArrayMd5(df: DataFrame, idCol: String,
                                         textCol: String, nHashes: Int,
                                         shingleSize: Int): DataFrame = {
     val consts = Array.tabulate(nHashes)(i => md5Const64(s"graft-minhash#$i"))
-    val sh = shingleRowsRaw(df.where(col(textCol).isNotNull), idCol, textCol,
-        shingleSize)
-      .select(col("id"), md5Hash64(col("s")).as("h"))
-    val aggs = consts.zipWithIndex.map { case (c, i) =>
-      min(col("h").bitwiseXOR(lit(c))).as(s"__m$i")
-    }
-    sh.groupBy("id")
-      .agg(aggs.head, aggs.tail: _*)
-      .select(col("id"),
-        array((0 until nHashes).map(i => col(s"__m$i")): _*).as("sig"))
+    df.where(col(textCol).isNotNull)
+      .select(col(idCol).as("id"),
+        Bridge.column(graft.functions.ShingleMinHashMd5(
+          Bridge.expression(docTokens(col(textCol))), shingleSize, consts)).as("sig"))
   }
+
+  /** The token array both md5-family shingle expressions start from. */
+  private def docTokens(text: Column): Column =
+    TextOps.tokens(coalesce(text, lit("")))
 
   /** Driver-side twin of [[md5Hash64]] for literal constants: first 16 hex
     * chars of the UTF-8 md5, as a signed (two's-complement) long.
@@ -631,10 +618,16 @@ object Dedup {
     * with the same DAG shape but engine-native hashing is
     * [[minhashNearDups]].
     *
-    * Scale shape: the banded self-join carries (id, band, key) rows only;
-    * verification semi-joins the shingle stream down to candidate ids
-    * before the shingle equi-join, so verify cost is bounded by the
-    * candidate set, never the corpus.
+    * Scale shape: the signatures are one projection per doc, and the
+    * banded self-join carries (id, band, key) rows only. Verification
+    * semi-joins the docs down to candidate ids, builds each candidate's
+    * distinct shingle strings ([[graft.functions.ShingleSet]], one row per
+    * doc), and joins them onto the candidate pairs:
+    * `n_common` is a merge of the two sorted sets
+    * ([[graft.functions.SortedStringIntersectSize]]) and the set sizes are
+    * `size()`. Verify cost is bounded by the candidate set, never the
+    * corpus. Shingles compare as exact strings, as the oracle's
+    * `list_distinct` sets do.
     */
   def minhashNearDupsMd5(df: DataFrame, idCol: String, textCol: String,
                          nHashes: Int = 16, bands: Int = 4,
@@ -650,12 +643,14 @@ object Dedup {
     // already absent from the array form, which is what the long form's
     // isNotNull filter re-established.
     //
-    // The band table is referenced on both sides of the self-join and the
-    // candidate table three times downstream; Spark replans (not reuses)
-    // each reference, re-running the whole signature pipeline per copy.
-    // Both are BOUNDED intermediates (ids x bands rows / candidate pairs),
-    // so pin them (ops.Pin: localCheckpoint in local mode, reliable
-    // checkpoint on a cluster): compute once, reuse everywhere.
+    // The band table is referenced on both sides of the self-join, the
+    // candidate table twice downstream and the candidate shingle sets on
+    // both sides of the verify join; Spark replans (not reuses) each
+    // reference, re-running its whole subtree per copy. All three are
+    // BOUNDED intermediates (ids x bands rows / candidate pairs /
+    // candidate docs), so pin them (ops.Pin: localCheckpoint in local
+    // mode, reliable checkpoint on a cluster): compute once, reuse
+    // everywhere.
     val sigs = minhashSigArrayMd5(df, idCol, textCol, nHashes, shingleSize)
     val banded = sigs
       .select(col("id"),
@@ -673,20 +668,21 @@ object Dedup {
       .transform(graft.ops.Pin.pin)
     val candIds = cands
       .select(explode(array(col("id_a"), col("id_b"))).as(idCol)).distinct()
-    // restrict BEFORE shingling: the explode+window runs over candidate
+    // restrict BEFORE shingling: shingle sets are built for candidate
     // docs only, not the corpus
-    val sh = shingleRows(df.join(candIds, Seq(idCol), "left_semi"),
-        idCol, textCol, shingleSize)
-      .select(col("id"), unhex(md5(col("s").cast("binary"))).as("shh"))
-      .transform(graft.ops.Pin.pin) // candidate-docs shingles only; reused twice below
-    val sizes = sh.groupBy("id").agg(count(lit(1)).as("nsh"))
-    val common = cands
-      .join(sh.select(col("id").as("id_a"), col("shh")), "id_a")
-      .join(sh.select(col("id").as("id_b"), col("shh")), Seq("id_b", "shh"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_common"))
-    common
-      .join(sizes.select(col("id").as("id_a"), col("nsh").as("n_a")), "id_a")
-      .join(sizes.select(col("id").as("id_b"), col("nsh").as("n_b")), "id_b")
+    val sets = df.join(candIds, Seq(idCol), "left_semi")
+      .select(col(idCol).as("id"),
+        Bridge.column(graft.functions.ShingleSet(Bridge.expression(docTokens(col(textCol))),
+          shingleSize)).as("shs"))
+      .transform(graft.ops.Pin.pin)
+    cands
+      .join(sets.select(col("id").as("id_a"), col("shs").as("shs_a")), "id_a")
+      .join(sets.select(col("id").as("id_b"), col("shs").as("shs_b")), "id_b")
+      .select(col("id_a"), col("id_b"),
+        Bridge.column(graft.functions.SortedStringIntersectSize(
+          Bridge.expression(col("shs_a")), Bridge.expression(col("shs_b")))).as("n_common"),
+        size(col("shs_a")).cast("long").as("n_a"),
+        size(col("shs_b")).cast("long").as("n_b"))
       .withColumn("jaccard",
         col("n_common").cast("double") / (col("n_a") + col("n_b") - col("n_common")))
       .filter(col("jaccard") >= threshold)

@@ -2435,8 +2435,8 @@ object Text {
       val pairs = Dedup.minhashNearDupsMd5(docs, "doc_id", "text",
         nHashes = 16, bands = 4, shingleSize = 3, threshold = 0.5)
         .select("id_a", "id_b")
-      val groups = graft.ops.Pin.pin(Dedup.dupGroups(pairs)
-        .select(col("group_id"), col("id").as("doc_id")))
+      val groups = Dedup.dupGroups(pairs)
+        .select(col("group_id"), col("id").as("doc_id"))
       // score ONLY group members: a semi-join prunes the quality scan
       // instead of scoring every doc. No broadcast hint — the dup-group
       // population is data-dependent (20–50% of docs on a raw web
@@ -2516,50 +2516,53 @@ object Text {
       // expression once per textual reference (only exchanges and
       // subqueries are reused, never scan subtrees). Fold EVERYTHING
       // the downstream stages need from text (quality, fingerprint,
-      // token count) into ONE scan projection and pin it as an
-      // id/metric frame — text itself is never pinned or shuffled, so
-      // the pinned state is O(rows × ~50 B), the fingerprint-frame
-      // regime the engine already pins everywhere. After this, text is
-      // scanned exactly twice per run: the meta pass and the minhash
-      // shingle pass (whose survivors gate is now an id semi-join).
-      // Measured sf0.1/local[32]: 7.0 → 6.1 s warm (the chain's floor
-      // is the minhash+CC machinery itself). The keep rule is
-      // unchanged: min doc_id per md5(text) among gated rows (rn=1
+      // token count) into ONE scan projection, exact-dedup it, and pin
+      // the survivors as an id/metric frame — text itself is never
+      // pinned or shuffled, so the pinned state is O(rows × ~50 B), the
+      // fingerprint-frame regime the engine already pins everywhere.
+      // Text is scanned exactly twice per run: this pass and the
+      // minhash pass over the survivors (an id semi-join), which builds
+      // signatures per document and shingle sets for candidates only.
+      // The keep rule is min doc_id per md5(text) among gated rows (rn=1
       // under orderBy doc_id ⟺ min doc_id; the oracle's fpd/rn CTE
-      // replays it).
-      val meta = graft.ops.Pin.pin(docs
+      // replays it): the struct min carries the winner's token count and
+      // quality along with its id, so no self semi-join re-derives the
+      // winners. dupGroups returns a materialized frame (a driver
+      // LocalRelation or its own pin), so its output is not pinned again.
+      val exact = graft.ops.Pin.pin(docs
         .select(col("doc_id"), md5(col("text")).as("__fp"),
           TextOps.tokenCount(col("text")).as("__ntok"),
           TextOps.qualityScore(col("text"), stops).as("quality"))
-        .filter(col("quality") >= 0.45))
-      val exactMeta = meta.join(
-        meta.groupBy("__fp")
-          .agg(min(col("doc_id")).as("doc_id"))
-          .select("doc_id"),
-        Seq("doc_id"), "left_semi")
+        .filter(col("quality") >= 0.45)
+        .groupBy("__fp")
+        .agg(min(struct(col("doc_id"), col("__ntok"), col("quality"))).as("__k"))
+        .select(col("__k.doc_id").as("doc_id"), col("__fp"),
+          col("__k.__ntok").as("__ntok"), col("__k.quality").as("quality")))
       val pairs = Dedup.minhashNearDupsMd5(
-          docs.join(exactMeta.select("doc_id"), Seq("doc_id"), "left_semi")
+          docs.join(exact.select("doc_id"), Seq("doc_id"), "left_semi")
             .select("doc_id", "text"),
           "doc_id", "text", nHashes = 16, bands = 4, shingleSize = 3,
           threshold = 0.5)
         .select("id_a", "id_b")
-      val groups = graft.ops.Pin.pin(Dedup.dupGroups(pairs)
-        .select(col("group_id"), col("id").as("doc_id")))
+      val groups = Dedup.dupGroups(pairs)
+        .select(col("group_id"), col("id").as("doc_id"))
       val wg = w.partitionBy("group_id").orderBy(col("quality").desc, col("doc_id"))
-      val losers = groups.join(exactMeta.select("doc_id", "quality"), "doc_id")
+      val losers = groups.join(exact.select("doc_id", "quality"), "doc_id")
         .withColumn("keep_id", first(col("doc_id")).over(wg))
         .filter(col("doc_id") =!= col("keep_id"))
         .select("doc_id")
       // no broadcast hint on `losers`: its size is the near-dup loser
       // population — data-dependent, unbounded on a crawl-shaped corpus;
       // AQE picks broadcast-vs-shuffle from the actual runtime size
-      val curated = exactMeta.join(losers, Seq("doc_id"), "left_anti")
+      val curated = exact.join(losers, Seq("doc_id"), "left_anti")
+      // every curated row is its fingerprint's only survivor, so a plain
+      // count of __fp is the distinct count (nulls excluded alike)
       graft.ops.Splits.hashSplit(curated.select("doc_id", "__fp", "__ntok"),
           "doc_id", "#split", Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
         .groupBy("split")
         .agg(count(lit(1)).as("n_docs"),
           sum(col("__ntok")).as("sum_tokens"),
-          countDistinct(col("__fp")).as("n_fp"),
+          count(col("__fp")).as("n_fp"),
           min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
         .orderBy("split")
     },
@@ -2639,8 +2642,8 @@ object Text {
       val pairs = Dedup.minhashNearDupsMd5(docs, "doc_id", "text",
         nHashes = 16, bands = 4, shingleSize = 3, threshold = 0.5)
         .select("id_a", "id_b")
-      val groups = graft.ops.Pin.pin(Dedup.dupGroups(pairs)
-        .select(col("group_id"), col("id").as("doc_id")))
+      val groups = Dedup.dupGroups(pairs)
+        .select(col("group_id"), col("id").as("doc_id"))
       // no broadcast hints: the notice list and the poisoned-group set
       // are both data-dependent (seeds scale with the corpus, hit groups
       // with dup density) — AQE sizes the joins at runtime

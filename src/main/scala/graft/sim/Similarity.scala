@@ -1947,7 +1947,7 @@ object Similarity {
     // the member with the LARGEST exact distance to its own centroid
     // survives (ties to the smaller id) — a window over near-dup groups,
     // bounded by construction like q154's keeper.
-    val members = graft.ops.Pin.pin(graft.dedup.Dedup.dupGroups(dups))
+    val members = graft.dedup.Dedup.dupGroups(dups)
       .select(col("group_id"), col("id").as("__id"))
       .join(assigned, "__id")
     val w = org.apache.spark.sql.expressions.Window

@@ -408,10 +408,14 @@ class PlanSpec extends AnyFunSuite {
       s"edge-iterator intersection gone from:\n$p")
     assert(!p.contains("SortMergeJoin"), s"shuffle join crept into:\n$p")
     // the degree-attachment joins sit above the Pin and don't print in
-    // the final executed plan; the visible three are adjacency ×2 +
-    // the per-node readout
-    assert("BroadcastHashJoin".r.findAllIn(p).length >= 3,
-      s"adjacency/readout frames not broadcast in:\n$p")
+    // the final executed plan; the visible two are the adjacency join
+    // and the per-node readout, and every join in the plan is broadcast
+    assert(!p.contains("ShuffledHashJoin"), s"shuffle join crept into:\n$p")
+    val joins = "(BroadcastHashJoin|BroadcastNestedLoopJoin|SortMergeJoin|ShuffledHashJoin|CartesianProduct) ".r
+      .findAllIn(p).length
+    val bhj = "BroadcastHashJoin ".r.findAllIn(p).length
+    assert(bhj === joins && bhj >= 2,
+      s"adjacency/readout frames not broadcast ($bhj of $joins joins) in:\n$p")
   }
 
   test("sequence packing: one bucket exchange, no doc text in flight (q110)") {

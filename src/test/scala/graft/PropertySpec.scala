@@ -133,6 +133,73 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  // Random documents over a vocabulary whose UTF-8 byte order and UTF-16
+  // order disagree ("ﬀ" U+FB00 vs "😀" U+1F600), with empty tokens from
+  // tabs (trim strips spaces only), and 0..12 tokens, so every n sees
+  // both the short-doc and the positional shingle forms.
+  private def unicodeDocs = (1 to 60).map { s =>
+    val vocab = Seq("a", "b", "The", "é", "ÉCOLE", "日本", "ﬀ", "😀", "x",
+      "ß", "Ωmega")
+    val toks = sample(Gen.choose(0, 12).flatMap(Gen.listOfN(_, Gen.oneOf(vocab))), 1500 + s)
+    val sep = sample(Gen.oneOf(" ", "  ", "\t", " \t "), 1600 + s)
+    val edge = sample(Gen.oneOf("", " ", "\t"), 1700 + s)
+    (s.toLong, edge + toks.mkString(sep) + edge)
+  }.toDF("doc_id", "text")
+
+  private def shingleRef(n: Int) = {
+    import graft.dedup.Dedup
+    array_sort(Dedup.shingles(coalesce(col("text"), lit("")), n))
+  }
+
+  test("native shingle set ≡ array_sort(Dedup.shingles) on random Unicode docs") {
+    import graft.text.TextOps
+    import org.apache.spark.sql.graft.Bridge
+    val docs = unicodeDocs
+    for (n <- 1 to 4) {
+      val toks = TextOps.tokens(coalesce(col("text"), lit("")))
+      val rows = docs.select(toks.as("t"),
+          Bridge.column(graft.functions.ShingleSet(Bridge.expression(toks), n)).as("got"),
+          shingleRef(n).as("want"))
+        .collect()
+      rows.foreach { r =>
+        val want = r.getSeq[String](2)
+        assert(r.getSeq[String](1) === want, s"n=$n tokens=${r.getSeq[String](0)}")
+        // interpreted path: the static compute on the same tokens
+        val t = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
+          r.getSeq[String](0).map(org.apache.spark.unsafe.types.UTF8String.fromString).toArray)
+        val interp = graft.functions.ShingleSet.compute(t, n)
+        assert((0 until interp.numElements()).map(interp.getUTF8String(_).toString) === want)
+      }
+    }
+  }
+
+  test("md5 MinHash signature ≡ driver-side min over Dedup.shingles, set merge ≡ set intersect") {
+    import graft.dedup.Dedup
+    import org.apache.spark.sql.graft.Bridge
+    val docs = unicodeDocs
+    val consts = (0 until 16).map(i => Dedup.md5Const64(s"graft-minhash#$i"))
+    for (n <- Seq(1, 3)) {
+      val sets = docs.select(col("doc_id"), shingleRef(n).as("sh")).collect()
+        .map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
+      val sigs = Dedup.minhashSigArrayMd5(docs, "doc_id", "text", 16, n).collect()
+      assert(sigs.length === sets.size)
+      sigs.foreach { r =>
+        val sh = sets(r.getLong(0))
+        assert(r.getSeq[Long](1) === consts.map(c => sh.map(Dedup.md5Const64(_) ^ c).min),
+          s"n=$n doc ${r.getLong(0)}")
+      }
+      // pairwise merge count over the same sorted sets
+      val pairs = docs.select(col("doc_id").as("a"), shingleRef(n).as("sa"))
+        .crossJoin(docs.select(col("doc_id").as("b"), shingleRef(n).as("sb")))
+        .filter(col("a") < col("b"))
+        .select(col("a"), col("b"), Bridge.column(graft.functions.SortedStringIntersectSize(
+          Bridge.expression(col("sa")), Bridge.expression(col("sb")))).as("k"))
+        .collect()
+      pairs.foreach(r => assert(r.getLong(2) ===
+        (sets(r.getLong(0)).toSet & sets(r.getLong(1)).toSet).size, s"n=$n $r"))
+    }
+  }
+
   test("wordNgrams: count and width invariants") {
     import graft.text.TextOps
     for (s <- 1 to 10) {

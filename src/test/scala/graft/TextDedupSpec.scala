@@ -355,6 +355,148 @@ class TextDedupSpec extends AnyFunSuite {
     }
   }
 
+  // Edge-case corpus for the md5 MinHash family (q79/q80 and every
+  // consumer of minhashNearDupsMd5): null, empty and whitespace-only text
+  // ("  \t " trims to a tab, two empty tokens, shingle " "), a doc under
+  // 3 tokens, a doc that repeats shingles (7 has 6's shingle SET), non-
+  // ASCII text (9 lowercases to 8; 10 changes 8's last token), and a
+  // 40-token base with 10 (J = 26/50) and 11 (J = 25/51) tokens
+  // replaced: three LSH candidates around the 0.5 threshold.
+  private lazy val md5Corpus = {
+    val rnd = new scala.util.Random(1005)
+    val base = (0 until 40).map(_ => s"t5x${rnd.nextInt(100000)}")
+    def swap(k: Int, tag: String) = base.zipWithIndex
+      .map { case (w, i) => if (i >= 15 && i < 15 + k) s"r5$tag$i" else w }.mkString(" ")
+    val uni = "Größe straße café naïve 日本語 テキスト école ﬀ 😀 fin"
+    Seq[(Long, String)](
+      (1L, null), (2L, ""), (3L, "   "), (4L, "  \t "), (5L, "Hello World"),
+      (6L, "x y z x y z x y z w"), (7L, "x y z x y z w"),
+      (8L, uni), (9L, uni.replace("café", "CAFÉ").replace("école", "ÉCOLE")),
+      (10L, uni.replace("fin", "ende")),
+      (11L, base.mkString(" ")), (12L, swap(10, "a")), (13L, swap(11, "b")))
+      .toDF("doc_id", "text")
+  }
+
+  test("md5 MinHash table and near-dup rows are pinned bit-exactly") {
+    val table = Dedup.minhashTableMd5(md5Corpus, "doc_id", "text")
+      .collect().map(r => (r.getLong(0), r.getLong(1)) ->
+        (if (r.isNullAt(2)) "-" else f"${r.getLong(2)}%016x")).toMap
+    val gotTable = table.keys.map(_._1).toSeq.sorted.map(id =>
+      s"#$id " + (0L until 16L).map(i => table((id, i))).mkString(" ")).mkString("\n")
+    assert(table.size === 13 * 16)
+    val wantTable = md5TablePin.stripMargin.trim.split("\\s+#").map(_.stripPrefix("#"))
+      .map(rec => "#" + rec.split("\\s+").mkString(" ")).mkString("\n")
+    assert(gotTable === wantTable)
+    def pairs(threshold: Double) =
+      Dedup.minhashNearDupsMd5(md5Corpus, "doc_id", "text", threshold = threshold)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+          java.lang.Double.doubleToLongBits(r.getDouble(3)))).sorted.toSeq
+    val at05 = pairs(0.5)
+    assert(at05 === md5PairsPin)
+    // 12-13 and 11-13 (J = 25/51) are candidates the threshold drops
+    assert(pairs(0.45).diff(at05) === Seq(
+      (11L, 13L, 25L, java.lang.Double.doubleToLongBits(25.0 / 51)),
+      (12L, 13L, 25L, java.lang.Double.doubleToLongBits(25.0 / 51))))
+  }
+
+  test("md5 MinHash signatures are bit-identical over repartition(7) input") {
+    def sigs(df: org.apache.spark.sql.DataFrame) =
+      Dedup.minhashSigArrayMd5(df, "doc_id", "text", 16, 3)
+        .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    val a = sigs(md5Corpus)
+    assert(a.size === 12 && a.values.forall(_.length == 16))
+    assert(sigs(md5Corpus.repartition(7)) === a)
+  }
+
+  test("md5 MinHash signature stage is one projection over the scan") {
+    // the pins inside minhashNearDupsMd5 and q158 hide this stage from
+    // their final plans, so it is checked on its own: no shingle explode,
+    // no lead window, no shuffle and no per-hash min aggregate
+    val path = java.nio.file.Files.createTempDirectory("graft_md5sig").resolve("docs").toString
+    md5Corpus.write.parquet(path)
+    val p = Dedup.minhashSigArrayMd5(spark.read.parquet(path), "doc_id", "text", 16, 3)
+      .queryExecution.executedPlan.toString
+    assert(p.contains("shingle_minhash_md5") && p.contains("FileScan"),
+      s"native signature projection missing from:\n$p")
+    for (node <- Seq("Exchange", "Window", "Generate", "Aggregate"))
+      assert(!p.contains(node), s"$node in the signature stage:\n$p")
+    // and the long form evaluates each signature once: no inferred
+    // filter re-derives it below the projection
+    val t = Dedup.minhashTableMd5(spark.read.parquet(path), "doc_id", "text")
+      .queryExecution.executedPlan.toString
+    assert("shingle_minhash_md5".r.findAllIn(t).length === 1,
+      s"signature evaluated more than once in:\n$t")
+  }
+
+  // (id_a, id_b, n_common, doubleToLongBits(jaccard)): 1.0, 7/9 and 26/50
+  private val md5PairsPin: Seq[(Long, Long, Long, Long)] = Seq(
+    (2L, 3L, 1L, 4607182418800017408L), (6L, 7L, 4L, 4607182418800017408L),
+    (8L, 9L, 8L, 4607182418800017408L), (8L, 10L, 7L, 4605180818965630521L),
+    (9L, 10L, 7L, 4605180818965630521L), (11L, 12L, 26L, 4602858963157741732L))
+
+  private val md5TablePin = """
+    |#1 - - - - - - - - - - - - - - - -
+    |#2
+    |  5455a71889db2d90 aee06bbf842ae344 d50c3198ddd13061 5df143fd58396470
+    |  54542e32b4b37d48 08720590915cc044 36ceb74ddf85008b 1e1679f6a7cb04c4
+    |  5affe35cc4393d97 ca847924bfdfb773 acf49f661621111d efec1910af26eaf9
+    |  c2dd21fd1aa38a57 ef4560765611bc6e 782440221f65fd28 4f6262fc9ef495d1
+    |#3
+    |  5455a71889db2d90 aee06bbf842ae344 d50c3198ddd13061 5df143fd58396470
+    |  54542e32b4b37d48 08720590915cc044 36ceb74ddf85008b 1e1679f6a7cb04c4
+    |  5affe35cc4393d97 ca847924bfdfb773 acf49f661621111d efec1910af26eaf9
+    |  c2dd21fd1aa38a57 ef4560765611bc6e 782440221f65fd28 4f6262fc9ef495d1
+    |#4
+    |  f25dc55d7b465dbd 08e809fa76b79369 730453dd2f4c404c fbf921b8aaa4145d
+    |  f25c4c77462e0d65 ae7a67d563c1b069 90c6d5082d1870a6 b81e1bb3555674e9
+    |  fcf7811936a44dba 6c8c1b614d42c75e 0afcfd23e4bc6130 49e47b555dbb9ad4
+    |  64d543b8e83efa7a 494d0233a48ccc43 de2c2267edf88d05 e96a00b96c69e5fc
+    |#5
+    |  defe107ae6c57144 244bdcddeb34bf90 5fa786fab2cf6cb5 d75af49f372738a4
+    |  deff9950dbad219c 82d9b2f2fe429c90 bc65002fb09b5c5f 94bdce94c8d55810
+    |  d054543eab276143 402fce46d0c1eba7 265f2804793f4dc9 6547ae72c038b62d
+    |  4876969f75bdd683 65eed714390fe0ba f28ff740707ba1fc c5c9d59ef1eac905
+    |#6
+    |  8a085da1ec6edaff da6af85a14e88589 92cb7972b7d49881 83acb9443d8c931f
+    |  8a09d48bd1068a27 d62fff29f4e9372b cf8d166f54701deb c04b834fc27ef3ab
+    |  84a219e5a18ccaf8 8d4331ced5da1f93 d87e0c8386e377d0 9b668af53fe48c34
+    |  851a691770a622b7 9bcff393c6d3daa3 8167e1009490e048 913f9845fb4162be
+    |#7
+    |  8a085da1ec6edaff da6af85a14e88589 92cb7972b7d49881 83acb9443d8c931f
+    |  8a09d48bd1068a27 d62fff29f4e9372b cf8d166f54701deb c04b834fc27ef3ab
+    |  84a219e5a18ccaf8 8d4331ced5da1f93 d87e0c8386e377d0 9b668af53fe48c34
+    |  851a691770a622b7 9bcff393c6d3daa3 8167e1009490e048 913f9845fb4162be
+    |#8
+    |  a9b579c37fa37c87 b3d61980d1013fd5 a1d1d2ba808aa131 a0119d26ae413567
+    |  a9b4f0e942cb2c5f a4757b125bd3fb94 9ac9c9cf150a3b5b b21107746d443f14
+    |  a71f3d8732416c80 a8628884711cf181 b1c2ed59430acd8c 8d0ae8b061e5ac0b
+    |  a03bd05dd460cca5 8da391d698d2fa9c 85c49ef9e91dac3f a274df036c489636
+    |#9
+    |  a9b579c37fa37c87 b3d61980d1013fd5 a1d1d2ba808aa131 a0119d26ae413567
+    |  a9b4f0e942cb2c5f a4757b125bd3fb94 9ac9c9cf150a3b5b b21107746d443f14
+    |  a71f3d8732416c80 a8628884711cf181 b1c2ed59430acd8c 8d0ae8b061e5ac0b
+    |  a03bd05dd460cca5 8da391d698d2fa9c 85c49ef9e91dac3f a274df036c489636
+    |#10
+    |  a9b579c37fa37c87 93c5f8ead17519e0 a861bacf24e9f574 a0119d26ae413567
+    |  a9b4f0e942cb2c5f a4757b125bd3fb94 9ac9c9cf150a3b5b b21107746d443f14
+    |  a71f3d8732416c80 a8628884711cf181 91d10c33437eebb9 8d0ae8b061e5ac0b
+    |  a03bd05dd460cca5 8da391d698d2fa9c 85c49ef9e91dac3f a274df036c489636
+    |#11
+    |  82a3f3521a7b61a6 80b6d8e289a3c1fd 80ac9f0d4e6897da 800a4564e6c33860
+    |  82a27a782713317e 82c6cf5641f7c250 99b948c557e8f857 85fd6c5b3134b16b
+    |  8704e5c57ac36187 856ffb9d7d32b59a 82a22c3b1ba833a4 8397cc52a1f9a4c3
+    |  8d36a344d84e88be 833eb53458cef254 90c34ab5c380651a 8afb6247d5d00aa1
+    |#12
+    |  82a3f3521a7b61a6 83ceb1e53524f196 80ac9f0d4e6897da 800a4564e6c33860
+    |  82a27a782713317e 82c6cf5641f7c250 99b948c557e8f857 85fd6c5b3134b16b
+    |  8704e5c57ac36187 81b2adb6a52aa6f2 81da453ca72f03cf 8e21e4a2134795ea
+    |  89ebf56f00569bd6 8e889dc4ea70c37d 8007ccce67523db6 8147f64cce8877c2
+    |#13
+    |  82a3f3521a7b61a6 8a70f74bde8fbbe4 80ac31e836b4cd10 800a4564e6c33860
+    |  82a27a782713317e 82c6cf5641f7c250 99b948c557e8f857 85fd6c5b3134b16b
+    |  8704e5c57ac36187 856ffb9d7d32b59a 886403924c8449bd 82cda3b87a8bd9b3
+    |  8d36a344d84e88be 8264dade83bc8f24 8ae7ca4014b5e254 890add54ac7da764"""
+
   test("minhash signatures are deterministic and length numHashes") {
     val docs = (0L to 4L).map(i => (i, mkDoc(i.toInt, 50))).toDF("doc_id", "text")
     val a = Dedup.minhashSignatures(docs, "doc_id", "text", numHashes = 32)
