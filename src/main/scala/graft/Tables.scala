@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
@@ -22,8 +23,20 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * exactly under either physical type.
   */
 object Tables {
-  def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Loads `<dir>/<name>.parquet`. For a single file the schema is read
+    * from its footer on the driver ([[FooterSchema]], Spark's own
+    * conversion under the session's conf) and handed to the reader, so
+    * the load runs no Spark job; `spark.read.parquet` alone launches a
+    * schema-inference job for every load, even of one file. A directory
+    * (a table Spark wrote) keeps `spark.read.parquet` and its inference.
+    */
+  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    FooterSchema.ofFile(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+  }
 
   /** Scan fan-out for UNSPLITTABLE fact-table inputs (round 20, guide
     * §2.5 "input skew"): every testdata table is ONE parquet file with

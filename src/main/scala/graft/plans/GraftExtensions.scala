@@ -7,12 +7,14 @@ import graft.functions.{ExactDotProduct, Md5Hash64, NfcNormalize}
 
 /** Session extensions registering the engine's native expressions with
   * the SQL function registry, so `spark.sql("SELECT exact_dot(a, b)")`
-  * works next to the Column API. Install via
+  * works next to the Column API, and the [[SmallFinalSort]] query-stage
+  * prep rule. Install via
   * `spark.sql.extensions=graft.plans.GraftExtensions` or
   * `SparkSession.builder.withExtensions(new GraftExtensions)`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectQueryStagePrepRule(_ => SmallFinalSort)
     ext.injectFunction((
       new FunctionIdentifier("exact_dot"),
       new ExpressionInfo(classOf[ExactDotProduct].getName, "exact_dot"),

@@ -740,44 +740,50 @@ object Series {
   * (`normalization.ipynb#11-17`): disaggregate a monthly total to daily
   * granularity proportionally to each day's share of the month's demand.
   *
-  * Shape: daily agg → monthly agg → join monthly total onto the month-start
-  * day only (the reference's right-outer join leaves nulls elsewhere,
-  * `normalization.ipynb#16`) → forward-fill within the month (W3) → ratio ×
-  * total (F12).
+  * Semantics: daily agg → monthly totals placed on the month-start day
+  * only (the reference's right-outer join leaves nulls elsewhere,
+  * `normalization.ipynb#16`) → forward-filled within the month (W3) →
+  * ratio × total (F12). A month whose first day has no events therefore
+  * has null monthly figures on every day.
   *
-  * Scale: the fill window partitions by month — fills never cross a month
-  * boundary, so there is no single-partition global window; the plan scales
-  * with the number of months × days.
+  * Plan shape: one window over the daily rows, partitioned by month with
+  * no order (a whole-partition frame), computes the month's `min(day)`
+  * and its `Exact.gsumOver` of `demand` and of `n_ev`: `mon_demand` is
+  * that sum where `min(day)` is the month's first day, else null, and
+  * `mon_total` likewise. That is the join-plus-ffill
+  * result bit for bit (`gsumOver` is `gsum`'s decimal-exact sum) without
+  * the monthly aggregate, the broadcast join on the month-start day or the
+  * two fill windows: one exchange for the daily aggregate, one for the
+  * window, one for the final sort.
+  *
+  * Scale: the window partitions by month, so there is no single-partition
+  * global window; each partition holds one month's days.
   */
 object Disaggregate {
-  import graft.ops.Exact.{davg, gsum}
+  import graft.ops.Exact.{davg, gsumOver}
 
   def query(s: SparkSession, dir: String): DataFrame = {
     val daily = events(s, dir)
       .groupBy(eventDay.as("day"))
       .agg(davg(col("value")).as("demand"), count(lit(1)).cast("double").as("n_ev"))
       .withColumn("mon", trunc(col("day"), "month"))
-    // gsum: demand is a COMPUTED daily mean (see Exact.gavgOver's note on
-    // cross-engine .5 ties of computed doubles)
-    val monthly = daily
-      .groupBy(col("mon"))
-      .agg(gsum(col("demand")).as("mon_demand"), gsum(col("n_ev")).as("mon_total"))
-    // monthly total visible only on the month-start row (J3 semantics) …
-    val monthlyK = monthly.withColumnRenamed("mon", "mon_key")
-    val joined = daily.join(monthlyK, col("day") === col("mon_key"), "left_outer")
-    // … then forward-filled across the month's days (W3, month-partitioned).
-    val filled = joined
-      .withColumn("mon_demand_f",
-        Fills.ffill(col("mon_demand"), Seq(col("mon")), Seq(col("day")), None))
-      .withColumn("mon_total_f",
-        Fills.ffill(col("mon_total"), Seq(col("mon")), Seq(col("day")), None))
-    filled.select(
+    // gsumOver: demand is a COMPUTED daily mean (see Exact.gavgOver's note
+    // on cross-engine .5 ties of computed doubles)
+    val m = Window.partitionBy("mon")
+    val totals = daily.select(col("day"), col("demand"), col("mon"),
+      min(col("day")).over(m).as("first_day"),
+      gsumOver(col("demand"), m).as("m_demand"), gsumOver(col("n_ev"), m).as("m_total"))
+    // the month's totals count only when its month-start day has a row
+    // (J3), and then hold on every day of the month (W3)
+    val onMonthStart = col("first_day") === col("mon")
+    val monDemand = when(onMonthStart, col("m_demand"))
+    totals.select(
         date_format(col("day"), "yyyy-MM-dd").as("day"),
         col("demand"),
         date_format(col("mon"), "yyyy-MM-dd").as("mon"),
-        col("mon_demand_f").as("mon_demand"),
-        (col("demand") / col("mon_demand_f")).as("share"),
-        (col("mon_total_f") * (col("demand") / col("mon_demand_f"))).as("disagg"))
+        monDemand.as("mon_demand"),
+        (col("demand") / monDemand).as("share"),
+        (when(onMonthStart, col("m_total")) * (col("demand") / monDemand)).as("disagg"))
       .orderBy("day")
   }
 
