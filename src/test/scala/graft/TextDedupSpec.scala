@@ -508,6 +508,55 @@ class TextDedupSpec extends AnyFunSuite {
       "signatures changed under repartitioning")
   }
 
+  // The xxhash64 family's edge cases: md5Corpus without its null-text doc
+  // (empty, whitespace-only, under 3 tokens, repeated shingles, non-ASCII,
+  // and the J ≈ 0.5 pairs around 11).
+  private lazy val xxCorpus = md5Corpus.where(col("doc_id") =!= 1L)
+
+  /** md5 of a signature's longs (big-endian): one bit-exact token per doc. */
+  private def sigDigest(sig: Seq[Long]): String = {
+    val b = java.nio.ByteBuffer.allocate(8 * sig.length)
+    sig.foreach(b.putLong)
+    java.security.MessageDigest.getInstance("MD5").digest(b.array)
+      .map(x => f"$x%02x").mkString
+  }
+
+  test("xxhash64 MinHash signatures and q44's candidate rows are pinned bit-exactly") {
+    for ((numHashes, want) <- Seq(64 -> xxSig64Pin, 128 -> xxSig128Pin)) {
+      val got = Dedup.minhashSignatures(xxCorpus, "doc_id", "text", numHashes = numHashes)
+        .collect().map(r => r.getLong(0) -> sigDigest(r.getSeq[Long](1))).toMap
+      assert(got === want, s"numHashes = $numHashes")
+    }
+    // q44's DAG: 64 hashes, 16 bands, bucket cap 1000, every candidate
+    val cands = Dedup.minhashCandidates(
+      Dedup.minhashSignatures(xxCorpus, "doc_id", "text"), "doc_id", bands = 16)
+    val got = Dedup.verifyJaccard(cands, xxCorpus, "doc_id", "text")
+      .select("id_a", "id_b", "jaccard").collect()
+      .map(r => (r.getLong(0), r.getLong(1),
+        java.lang.Double.doubleToLongBits(r.getDouble(2)))).sorted.toSeq
+    assert(got === xxPairsPin)
+  }
+
+  private val xxSig64Pin: Map[Long, String] = Map(
+    2L -> "a6bfc927cc00cc61815f5b9ab233ce5c", 3L -> "a6bfc927cc00cc61815f5b9ab233ce5c",
+    4L -> "b12b6945c93e0948b6579e973b9bce2f", 5L -> "f053bacf41fa5ed289a86db93b704858",
+    6L -> "469b8e22ddda4d5f9768f1f39e576666", 7L -> "469b8e22ddda4d5f9768f1f39e576666",
+    8L -> "16310950310d516e2e241e2ef5debbe0", 9L -> "16310950310d516e2e241e2ef5debbe0",
+    10L -> "a73e55628800d64f9a964d02d50e27dc", 11L -> "89aa0c28734bd52466a6826b1500b58b",
+    12L -> "74580cb65f8f739401b35c1b11eb8b43", 13L -> "9cc8e6b605283c99da498097eaf651bf")
+  private val xxSig128Pin: Map[Long, String] = Map(
+    2L -> "11538ddf266d2c5e503a7e248e290c27", 3L -> "11538ddf266d2c5e503a7e248e290c27",
+    4L -> "ee1284719ec3e5cdd97236053ff1ce5b", 5L -> "9a4cb457bcdb71b7348ff75870da55fe",
+    6L -> "4b21f0d4503ea81f5e15556c6f561dc2", 7L -> "4b21f0d4503ea81f5e15556c6f561dc2",
+    8L -> "d8d34efbfa9e6dcfbe3ff87f54e628d1", 9L -> "d8d34efbfa9e6dcfbe3ff87f54e628d1",
+    10L -> "d34e54e3b40db5eb1c3e7b6ed85f474f", 11L -> "56d3cee076297f310fb48eee80323b9b",
+    12L -> "8ad27aa945336c3ae041f79f10de3096", 13L -> "6528ac96998eac87faeccc897e72dd18")
+  // (id_a, id_b, doubleToLongBits(jaccard)): 1.0, 7/9 and 26/50
+  private val xxPairsPin: Seq[(Long, Long, Long)] = Seq(
+    (2L, 3L, 4607182418800017408L), (6L, 7L, 4607182418800017408L),
+    (8L, 9L, 4607182418800017408L), (8L, 10L, 4605180818965630521L),
+    (9L, 10L, 4605180818965630521L), (11L, 12L, 4602858963157741732L))
+
   test("simhash near-dups: hamming<=maxDist pairs found via chunk pigeonhole") {
     val base = mkDoc(3, 200)
     val nearDup = base.split(" ").updated(10, "tweak").mkString(" ")
