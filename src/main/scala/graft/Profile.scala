@@ -3,15 +3,23 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
-/** Scratch profiling / plan-audit main (not part of the driver contract).
-  * Round 15: which stage holds the PQ exact-encode straggler (VERDICT
-  * r14 item 7 — 68.6 s wall at 1M, 65.9 s of it ONE task doing the
-  * decimal argmin)? Prints a per-stage task histogram for the
-  * exact-encode pqTopK, then A/Bs the straggler fix.
+/** Profiling / plan-audit main (not part of the driver contract):
+  *  - `Profile <n> q <name1,name2,...>` runs each named query three times
+  *    (bench shape: noop sink, cache clear and GC between reps) and prints
+  *    its wall plus a per-stage task histogram;
+  *  - `Profile <n> explain <name1,name2,...> [suffix]` writes each named
+  *    query's formatted plan to `<plans dir>/<name>_<suffix>.txt`.
+  * `<n>` is unused. The sf dir comes from SPARK_GRAFT_SF_DIR (default
+  * sf0.1), the plans dir from SPARK_GRAFT_PLANS_DIR (default plans/r21).
   */
 object Profile {
   def main(args: Array[String]): Unit = {
-    val n = if (args.nonEmpty) args(0).toLong else 1000000L
+    val mode = if (args.length > 1) args(1) else ""
+    if (!Seq("q", "explain").contains(mode) || args.length < 3) {
+      System.err.println("usage: Profile <n> q <name1,name2,...>\n" +
+        "       Profile <n> explain <name1,name2,...> [suffix]")
+      sys.exit(2)
+    }
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", 32)
       .config("spark.sql.session.timeZone", "UTC")
@@ -61,21 +69,11 @@ object Profile {
       r
     }
 
-    val mode = if (args.length > 1) args(1) else "pq"
+    val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
+    val picked = graft.SparkEntry.registry.filter(qq => names.exists(qq.name.contains))
     if (mode == "q") {
-      // round 20: per-stage histogram of any registered query (bench
-      // shape — noop sink, cache-clear+GC between reps). args(0) is
-      // unused; args(2) = comma-separated name substrings; sf dir from
-      // SPARK_GRAFT_SF_DIR (default sf0.1).
-      if (args.length < 3) {
-        System.err.println("usage: Profile <n> q <name1,name2,...>")
-        spark.stop(); return
-      }
       val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-      val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
-      spark.conf.set("spark.sql.session.timeZone", "UTC")
-      graft.SparkEntry.registry
-        .filter(qq => names.exists(qq.name.contains)).foreach { qq =>
+      picked.foreach { qq =>
         (1 to 3).foreach { i =>
           spark.sparkContext.getPersistentRDDs.values
             .foreach(_.unpersist(blocking = true))
@@ -86,28 +84,11 @@ object Profile {
           }
         }
       }
-      spark.stop(); return
-    }
-    if (mode == "explain") {
-      // round 20: dump .explain("formatted") for named queries to
-      // <plans dir>/<name>_<suffix>.txt (args(2) = name substrings,
-      // args(3) = suffix, default "after"; plans dir from
-      // SPARK_GRAFT_PLANS_DIR, default plans/r21). Used for the
-      // optimization rounds' before/after plan evidence. ADVICE r20:
-      // guard the arg list and resolve the output dir explicitly
-      // instead of a hard-coded cwd-relative plans/r20.
-      if (args.length < 3) {
-        System.err.println(
-          "usage: Profile <n> explain <name1,name2,...> [suffix]")
-        spark.stop(); return
-      }
+    } else {
       val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
       val plansDir = sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "plans/r21")
-      val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
       val suffix = if (args.length > 3) args(3) else "after"
-      spark.conf.set("spark.sql.session.timeZone", "UTC")
-      graft.SparkEntry.registry
-        .filter(qq => names.exists(qq.name.contains)).foreach { qq =>
+      picked.foreach { qq =>
         val plan = qq.impl(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         val p = java.nio.file.Paths.get(plansDir, s"${qq.name}_$suffix.txt")
@@ -115,45 +96,6 @@ object Profile {
         java.nio.file.Files.writeString(p, plan)
         println(s"wrote $p (${plan.length} chars)")
       }
-      spark.stop(); return
-    }
-    if (mode == "nb") {
-      // round-15: the classifier decade's 200k anomaly — one task is
-      // ~80% of a 9-26 s wall at a flat 2.65 MB shuffle. Which stage?
-      import org.apache.spark.sql.functions._
-      def docs(nd: Long) = spark.range(nd).select(col("id").as("doc_id"),
-        array_join(transform(sequence(lit(0), lit(59)),
-          i => concat(lit("w"), translate(
-            pmod(xxhash64(col("id"), i), lit(5000)).cast("string"),
-            "0123456789", "abcdefghij"))), " ").as("text"),
-        (pmod(xxhash64(col("id"), lit(11L)), lit(10)) < 3).as("pos"))
-      def body(nd: Long): Long =
-        graft.text.Classifier.nbQuality(docs(nd), "doc_id", "text",
-          isPos = col("pos")).count()
-      body(20000L) // warm
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      (1 to 3).foreach { i =>
-        time(s"nb_classifier n=$n rep$i") { body(n) }
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      }
-      spark.stop(); return
-    }
-    import graft.sim.Similarity
-    val dim = 64; val m = 8; val k = 16; val topK = 10
-    def emb = graft.tools.ScaleStress.annEmbeddings(spark, n, dim)
-    def qs = graft.tools.ScaleStress.annEmbeddings(spark, 64L, dim)
-    // warm
-    Similarity.pqTopK(graft.tools.ScaleStress.annEmbeddings(spark, 20000L, dim),
-      graft.tools.ScaleStress.annEmbeddings(spark, 8L, dim),
-      "vec_id", "embedding", m, k, dim, topK).count()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    time("pqTopK exact-encode (audit)") {
-      Similarity.pqTopK(emb, qs, "vec_id", "embedding", m, k, dim, topK).count()
-    }
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    time("pqTopK fast-encode (production)") {
-      Similarity.pqTopK(emb, qs, "vec_id", "embedding", m, k, dim, topK,
-        exactEncode = false).count()
     }
     spark.stop()
   }

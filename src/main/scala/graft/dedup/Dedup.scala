@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
+import graft.functions.{MinHashFamily, ShingleMinHash, ShingleSet, SortedStringIntersectSize}
 import graft.text.TextOps
 
 /** Deduplication for large-scale corpus curation: exact, MinHash+LSH,
@@ -69,20 +70,18 @@ object Dedup {
 
   // -------------------------------------------------------------- minhash
 
-
   /** Word n-gram shingles of the canonical text (distinct strings).
-    * Readable form — for the hot minhash/Jaccard path use
-    * [[shingleHashes]], which avoids per-index slice+concat allocation.
+    * Readable reference form: the MinHash path builds the same strings
+    * per document natively ([[graft.functions.Shingles]]), and the
+    * prefix-filter joins use [[shingleHashes]].
     */
   def shingles(text: Column, n: Int): Column =
     // n-fold zip_with over shifted slices, not slice(toks, i, n) in an
     // index lambda: a non-lambda subexpression in a HOF body
     // re-evaluates per ELEMENT, so the old form re-ran the tokenizing
     // split O(tokens) times per doc (the q195 lesson,
-    // LangModel.bigramArr) — quadratic on the streaming
-    // minhashSignatureExpr path that folds over this array numHashes
-    // times. The token array is additionally let-bound once per row
-    // through a single-element array + transform (the
+    // LangModel.bigramArr). The token array is additionally let-bound
+    // once per row through a single-element array + transform (the
     // [[graft.text.TextOps.chunkWindows]] trick): the gram tree
     // references it 2n+2 times, and each textual reference of a raw
     // expression analyzes into a distinct lambda binding that
@@ -106,9 +105,8 @@ object Dedup {
     * shingle is a `concat_ws` over `lead` windows partitioned by doc —
     * one hash shuffle on the doc id (even distribution at any scale),
     * then a distinct. This is the relational form, for consumers that
-    * join or group on shingles ([[jaccardPairs]], [[minhashSignatures]]);
-    * the md5 MinHash family builds the same shingles per document
-    * instead ([[graft.functions.Shingles]]).
+    * join or group on shingles ([[jaccardPairs]]); MinHash builds the
+    * same shingles per document instead ([[graft.functions.Shingles]]).
     */
   def shingleRows(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
     val toks = df.select(col(idCol).as("id"),
@@ -158,106 +156,90 @@ object Dedup {
       })))))
   }
 
-  /** Seeded per-family xor constants (md5-derived, driver-side) for the
-    * production MinHash family: family i maps a 64-bit shingle hash h to
-    * h XOR c_i — a bijective permutation of the full hash space, the
-    * same construction as the md5 oracle family ([[minhashTableMd5]]).
+  /** (id, sig: array<long> of length nHashes) — the MinHash signature of
+    * every non-null-text doc under `family`: sig[i] = min over the doc's
+    * shingles ([[shingles]]' strings) of `family.hash(shingle) XOR c_i`
+    * ([[graft.functions.MinHashFamily]] owns the hash and the constants).
+    * A null-text doc gets no signature, so it is never a candidate.
     *
-    * This REPLACED the original affine family `(a·h + b) mod (2^61−1)`
-    * in round 9: with h folded to 31 bits, a·h + b < 2^62 wraps the
-    * 2^61−1 modulus at most once — and for a < 2^30 (half the seeds)
-    * NEVER — so those "permutations" were monotone in h and every
-    * component picked the same global min-shingle. Signature components
-    * were massively correlated: measured est-sim on J≈0.88/0.83 pairs
-    * came out 1.0/0.125 instead of ≈J, wrecking the LSH S-curve (recall
-    * of true near-dups that differ in the min shingle, false banding
-    * collisions for docs sharing it). A modular-affine family is only
-    * sound when the modulus sits just above the hash range (e.g.
-    * 2^31−1 over 31-bit h); the xor family avoids the pitfall entirely
-    * and keeps every min replayable by any engine with xor.
-    */
-  private def xorConsts(numHashes: Int, seed: Long): IndexedSeq[Long] =
-    (0 until numHashes).map(i => md5Const64(s"graft-minhash-xx/$seed#$i"))
-
-  /** (idCol, sig: array<long> of length numHashes) — the MinHash signature
-    * of each document's shingle set. Seeded xor permutations of the
-    * 64-bit xxhash64 shingle hash (see [[xorConsts]]); one explode + one
-    * groupBy (shuffles only (id, 8-byte hash) pairs, map-side combined).
+    * Plan shape: ONE projection over the scan. The native
+    * [[graft.functions.ShingleMinHash]] builds the doc's shingles from its
+    * token array and folds them into the signature in the same row, so
+    * there is no posexplode, no `lead` window, no exchange and no
+    * nHashes-way `min` aggregate. A projection also runs unchanged on a
+    * stream, so online dedup attaches signatures at ingestion with it.
+    * TextDedupSpec checks this plan directly: the callers' pins hide it
+    * from their final plans.
     */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
-                        numHashes: Int = 64, shingleSize: Int = 3,
-                        seed: Long = 42L): DataFrame = {
-    val consts = xorConsts(numHashes, seed)
-    val exploded = shingleRows(df, idCol, textCol, shingleSize)
-      .select(col("id").as(idCol), xxhash64(col("s")).as("h"))
-    val aggs = consts.zipWithIndex.map { case (c, i) =>
-      min(col("h").bitwiseXOR(lit(c))).as(s"s$i")
-    }
-    exploded.groupBy(col(idCol))
-      .agg(aggs.head, aggs.tail: _*)
-      .select(col(idCol), array((0 until numHashes).map(i => col(s"s$i")): _*).as("sig"))
+                        family: MinHashFamily, nHashes: Int,
+                        shingleSize: Int = 3): DataFrame =
+    df.where(col(textCol).isNotNull)
+      .select(col(idCol).as("id"),
+        Bridge.column(ShingleMinHash(Bridge.expression(docTokens(col(textCol))),
+          shingleSize, family, nHashes)).as("sig"))
+
+  /** The token array the per-document shingle expressions start from. */
+  private def docTokens(text: Column): Column =
+    TextOps.tokens(coalesce(text, lit("")))
+
+  /** MinHash signatures in long form (id, h_idx, minhash), the shape the
+    * md5 oracle replays (q79): every doc keeps its nHashes rows, with a
+    * null minhash for a null-text doc (the final left join). Each
+    * (id, h_idx) row reads its slot of the joined signature. No generator
+    * sits over the signature: Spark infers a `size(sig) > 0` filter under
+    * an explode of an attribute and pushes it through the projection,
+    * which evaluated every signature twice.
+    */
+  def minhashTableMd5(df: DataFrame, idCol: String, textCol: String,
+                      nHashes: Int = 16, shingleSize: Int = 3): DataFrame = {
+    val sig = minhashSignatures(df, idCol, textCol, MinHashFamily.Md5, nHashes, shingleSize)
+    val idx = broadcast(df.sparkSession.range(nHashes).toDF("h_idx"))
+    df.select(col(idCol).as("id")).crossJoin(idx)
+      .join(sig, Seq("id"), "left")
+      .select(col("id").as(idCol), col("h_idx"),
+        element_at(col("sig"), (col("h_idx") + 1).cast("int")).as("minhash"))
   }
 
-  /** The [[minhashSignatures]] signature as ONE pure column expression —
-    * no explode, no shuffle: shingle strings → 64-bit hashes → one
-    * `array_min` per xor family. Value-identical to the aggregated form
-    * (same shingle set, same [[xorConsts]]), proven by spec. This is
-    * the streaming-safe shape: a projection runs in any micro-batch with
-    * no stateful aggregation, so online dedup can attach signatures at
-    * ingestion. Cost is numHashes passes over the doc's shingle array
-    * inside one projection — the batch path amortizes that via
-    * explode+groupBy; per-doc columnar work is the right trade wherever
-    * a shuffle is unavailable (streams) or unwanted (scan-side tagging).
+  /** Candidate near-duplicate pairs (id_a < id_b, distinct) by LSH banding
+    * of [[minhashSignatures]]' rows: the signature splits into `bands`
+    * bands of nHashes/bands slots, and docs whose band key is equal in any
+    * band become a candidate pair. A band key is the band's minhashes in
+    * slot order, comma-joined: exact, so two docs share a bucket only if
+    * their band slots are equal (no bucket-hash collision adds pairs), and
+    * it derives per row from the signature array with no extra exchange.
     *
-    * The shingle-hash array is LET-BOUND once per row
-    * ([[graft.text.TextOps.letBound]]): the per-family min maps
-    * reference it numHashes times, and each textual reference of the
-    * raw expression analyzes into a distinct lambda binding CSE cannot
-    * unify — the unbound form re-built the whole shingle array (the
-    * tokenizing split, the n-fold zip_with, the distinct) numHashes
-    * times per row, a 64× hidden multiplier on exactly the streaming
-    * path that cannot amortize via explode (SCALE.md round 13).
-    */
-  def minhashSignatureExpr(text: Column, numHashes: Int = 64,
-                           shingleSize: Int = 3, seed: Long = 42L): Column = {
-    val consts = xorConsts(numHashes, seed)
-    TextOps.letBound(transform(shingles(coalesce(text, lit("")), shingleSize),
-      s => xxhash64(s))) { hs =>
-      array(consts.map { c =>
-        array_min(transform(hs, h => h.bitwiseXOR(lit(c))))
-      }: _*)
-    }
-  }
-
-  /** Candidate near-duplicate pairs via LSH banding: split the signature
-    * into `bands` bands of numHashes/bands rows; docs sharing any band
-    * hash become a candidate pair. Returns (id_a, id_b) with a < b,
-    * distinct.
+    * `maxBucketSize` caps the membership of each (band, key) bucket before
+    * the self-join, keeping its `maxBucketSize` smallest ids: a degenerate
+    * hot bucket (boilerplate shingles, empty docs) otherwise goes quadratic
+    * within the bucket at corpus scale. Docs beyond the cap lose only that
+    * bucket's votes; with several bands true near-dups still collide
+    * elsewhere. `Int.MaxValue` (the default) applies no cap and no window.
     *
-    * `maxBucketSize` caps the per-(band,hash) membership before the
-    * self-join: a degenerate hot bucket (boilerplate shingles, empty
-    * docs) otherwise goes quadratic WITHIN the bucket at corpus scale.
-    * Docs beyond the cap in a bucket lose only that bucket's votes —
-    * with multiple bands true near-dups still collide elsewhere
-    * (standard LSH practice; set to Int.MaxValue to disable).
+    * The band table is referenced on both sides of the self-join and the
+    * candidate table by every consumer; Spark replans (not reuses) each
+    * reference, so both BOUNDED intermediates (ids × bands rows /
+    * candidate pairs) are pinned ([[graft.ops.Pin]]).
     */
-  def minhashCandidates(sigs: DataFrame, idCol: String, bands: Int,
-                        numHashes: Int = 64,
-                        maxBucketSize: Int = 1000): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val r = numHashes / bands
-    val banded = sigs.select(
-      col(idCol),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => hash(concat_ws(",", slice(col("sig"), b * r + 1, lit(r))), b))))
-      .toDF(idCol, "band", "bh")
-    val capped = capBuckets(banded, idCol, Seq("band", "bh"), maxBucketSize)
-      .transform(graft.ops.Pin.pin) // ids x bands rows; both self-join sides reuse it
-    val left = capped.select(col(idCol).as("id_a"), col("band"), col("bh"))
-    val right = capped.select(col(idCol).as("id_b"), col("band"), col("bh"))
-    left.join(right, Seq("band", "bh"))
+  def minhashCandidates(sigs: DataFrame, nHashes: Int, bands: Int,
+                        maxBucketSize: Int = Int.MaxValue): DataFrame = {
+    require(nHashes % bands == 0, "nHashes must divide into bands")
+    val r = nHashes / bands
+    val banded = sigs
+      .select(col("id"),
+        posexplode(array((0 until bands).map { b =>
+          concat_ws(",", (b * r until (b + 1) * r)
+            .map(i => element_at(col("sig"), i + 1).cast("string")): _*)
+        }: _*)).as(Seq("band", "key")))
+      .select(col("id"), col("band").cast("long").as("band"), col("key"))
+    val capped = capBuckets(banded, "id", Seq("band", "key"), maxBucketSize)
+      .transform(graft.ops.Pin.pin)
+    capped.select(col("id").as("id_a"), col("band"), col("key"))
+      .join(capped.select(col("id").as("id_b"), col("band"), col("key")),
+        Seq("band", "key"))
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
+      .transform(graft.ops.Pin.pin)
   }
 
   /** Keep at most `cap` members per bucket (deterministic: the `cap`
@@ -271,29 +253,56 @@ object Dedup {
         Window.partitionBy(bucketCols.map(col): _*).orderBy(col(idCol))))
       .filter(col("__bn") <= cap).drop("__bn")
 
-  /** Exact Jaccard over word n-gram shingle sets (64-bit identities) for
-    * given pairs.
+  /** Exact n-gram Jaccard of every candidate pair (id_a, id_b):
+    * (id_a, id_b, n_common, jaccard), unfiltered — callers apply their
+    * own threshold (q44 reports every candidate's jaccard).
+    *
+    * The docs are semi-joined down to candidate ids before shingling, so
+    * the cost is bounded by the candidate set, never the corpus. Each
+    * candidate's distinct shingle strings ([[graft.functions.ShingleSet]],
+    * one pinned row per doc) join onto the pairs: `n_common` is a merge of
+    * the two sorted sets ([[graft.functions.SortedStringIntersectSize]])
+    * and the set sizes are `size()`. Shingles compare as exact strings, as
+    * the oracle's `list_distinct` sets do; the single integer-ratio double
+    * division is IEEE-identical across engines.
     */
-  def verifyJaccard(pairs: DataFrame, docs: DataFrame, idCol: String,
+  def verifyJaccard(cands: DataFrame, df: DataFrame, idCol: String,
                     textCol: String, shingleSize: Int = 3): DataFrame = {
-    // Shingle only the docs that appear in a candidate pair, and pin the
-    // result: the unrestricted form re-shingled the WHOLE corpus once per
-    // join side, while the verify cost should be bounded by the candidate
-    // set (same shape as minhashNearDupsMd5's semi-join).
-    val p = graft.ops.Pin.pin(pairs) // bounded pair list, referenced 3×
-    val candIds = p
+    val candIds = cands
       .select(explode(array(col("id_a"), col("id_b"))).as(idCol)).distinct()
-    val sh = docs.join(candIds, Seq(idCol), "left_semi")
-      .select(col(idCol), shingleHashes(col(textCol), shingleSize).as("sh"))
+    val sets = df.join(candIds, Seq(idCol), "left_semi")
+      .select(col(idCol).as("id"),
+        Bridge.column(ShingleSet(Bridge.expression(docTokens(col(textCol))),
+          shingleSize)).as("shs"))
       .transform(graft.ops.Pin.pin)
-    p
-      .join(sh.withColumnRenamed(idCol, "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-      .join(sh.withColumnRenamed(idCol, "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
+    cands
+      .join(sets.select(col("id").as("id_a"), col("shs").as("shs_a")), "id_a")
+      .join(sets.select(col("id").as("id_b"), col("shs").as("shs_b")), "id_b")
+      .select(col("id_a"), col("id_b"),
+        Bridge.column(SortedStringIntersectSize(
+          Bridge.expression(col("shs_a")), Bridge.expression(col("shs_b")))).as("n_common"),
+        size(col("shs_a")).cast("long").as("n_a"),
+        size(col("shs_b")).cast("long").as("n_b"))
       .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))))
-      .select("id_a", "id_b", "jaccard")
+        col("n_common").cast("double") / (col("n_a") + col("n_b") - col("n_common")))
+      .select("id_a", "id_b", "n_common", "jaccard")
   }
+
+  /** Banded-LSH near-dup detection end to end: [[minhashSignatures]] →
+    * [[minhashCandidates]] → [[verifyJaccard]], every candidate pair with
+    * its exact Jaccard (filter on `jaccard` for a threshold). Deterministic
+    * at every step. Under `MinHashFamily.Md5` DuckDB replays the whole DAG
+    * (q80); q44 runs the same DAG under `MinHashFamily.XxHash64` with a
+    * bucket cap.
+    */
+  def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
+                      family: MinHashFamily, nHashes: Int, bands: Int,
+                      shingleSize: Int = 3,
+                      maxBucketSize: Int = Int.MaxValue): DataFrame =
+    verifyJaccard(
+      minhashCandidates(minhashSignatures(df, idCol, textCol, family, nHashes, shingleSize),
+        nHashes, bands, maxBucketSize),
+      df, idCol, textCol, shingleSize)
 
   /** Cross-engine reproducible 64-bit hash: the first 8 md5 digest bytes
     * as a signed long (two's complement). Any engine with md5 can
@@ -302,22 +311,17 @@ object Dedup {
     * xxhash64 — use for oracle-checked paths, keep xxhash64 in production
     * hot paths. Since round 8 this is the native codegen'd
     * [[graft.functions.Md5Hash64]] (digest bytes straight to long, no
-    * hex-string round-trip); [[md5Hash64Ref]] keeps the declarative
-    * composition as the portable reference, pinned equal by DedupSpec.
+    * hex-string round-trip); TextDedupSpec pins it equal to the
+    * declarative hex composition.
     */
   def md5Hash64(c: Column): Column =
     Bridge.column(graft.functions.Md5Hash64(Bridge.expression(c.cast("binary"))))
 
-  /** Declarative reference form of [[md5Hash64]]: first 16 hex chars of
-    * md5 assembled via conv + shiftleft (shiftleft wraps, which bitwise
-    * ops are allowed to do under ANSI) — same values bit-for-bit.
+  /** Driver-side twin of [[md5Hash64]] for literal constants: first 16 hex
+    * chars of the UTF-8 md5, as a signed (two's-complement) long.
     */
-  def md5Hash64Ref(c: Column): Column = {
-    val hex = md5(c.cast("binary"))
-    val hi = conv(substring(hex, 1, 8), 16, 10).cast("long")
-    val lo = conv(substring(hex, 9, 8), 16, 10).cast("long")
-    shiftleft(hi, 32).bitwiseOR(lo)
-  }
+  def md5Const64(s: String): Long =
+    graft.functions.Md5Hash64.compute(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   /** Exact n-gram Jaccard similarity join: all pairs with
     * jaccard >= threshold, computed from distinct (id, shingle-md5) rows
@@ -448,8 +452,7 @@ object Dedup {
     * rarest-first, nsh = |set|).
     *
     * Shingle sets are 64-bit identities from the [[shingleHashes]] scan
-    * projection (the [[verifyJaccard]] identity space — no per-token
-    * window, no text in flight). One explode feeds the global document
+    * projection (no per-token window, no text in flight). One explode feeds the global document
     * frequency via a count window over the hash (one shuffle gives df
     * per ROW — the groupBy+re-join form costs a second full-stream
     * shuffle; same trick as the dup-span gram counting), then the stream
@@ -544,161 +547,6 @@ object Dedup {
         col("n_common").cast("double") / least(col("n_a"), col("n_b")))
       .filter(col("containment") >= threshold)
       .select("id_a", "id_b", "n_common", "n_a", "n_b", "containment")
-  }
-
-  /** Oracle-checkable MinHash signatures in long form (id, h_idx, minhash):
-    * each shingle is md5-hashed ONCE ([[md5Hash64]]) and hash family i is
-    * `h XOR c_i`, where constant c_i is itself the md5-derived hash of
-    * `"graft-minhash#" + i` — a bijective per-family permutation with no
-    * modular arithmetic, so any engine with md5 and xor replicates every
-    * min bit-for-bit (the production near-dup path keeps the faster
-    * xxhash64 family in [[minhashSignatures]]). Docs with null text
-    * keep their nHashes rows with null minhash via the final left join.
-    *
-    * Scale shape: one md5 per shingle position and the nHashes xors, all
-    * inside the per-document projection of [[minhashSigArrayMd5]]; each
-    * (id, h_idx) row then reads its slot of the joined signature. No
-    * generator sits over the signature: Spark infers a `size(sig) > 0`
-    * filter under an explode of an attribute and pushes it through the
-    * projection, which evaluated every signature twice.
-    */
-  def minhashTableMd5(df: DataFrame, idCol: String, textCol: String,
-                      nHashes: Int = 16, shingleSize: Int = 3): DataFrame = {
-    val sig = minhashSigArrayMd5(df, idCol, textCol, nHashes, shingleSize)
-    val idx = broadcast(df.sparkSession.range(nHashes).toDF("h_idx"))
-    df.select(col(idCol).as("id")).crossJoin(idx)
-      .join(sig, Seq("id"), "left")
-      .select(col("id").as(idCol), col("h_idx"),
-        element_at(col("sig"), (col("h_idx") + 1).cast("int")).as("minhash"))
-  }
-
-  /** (id, sig: array<long> of length nHashes) — the md5-family MinHash
-    * signature of every non-null-text doc: sig[i] = min over the doc's
-    * shingles of md5Hash64(shingle) XOR c_i. Value-wise sig[i] = the
-    * long-form minhash at h_idx i ([[minhashTableMd5]] posexplodes
-    * exactly this array, so the two forms cannot drift).
-    *
-    * Plan shape: ONE projection over the scan. The native
-    * [[graft.functions.ShingleMinHashMd5]] builds the doc's shingles from
-    * its token array and folds them into the signature in the same row,
-    * so there is no posexplode, no `lead` window, no exchange and no
-    * nHashes-way `min` aggregate (the round-20 form ran all four over one
-    * row per shingle position). TextDedupSpec checks this plan directly:
-    * the callers' pins hide it from their final plans.
-    */
-  private[graft] def minhashSigArrayMd5(df: DataFrame, idCol: String,
-                                        textCol: String, nHashes: Int,
-                                        shingleSize: Int): DataFrame = {
-    val consts = Array.tabulate(nHashes)(i => md5Const64(s"graft-minhash#$i"))
-    df.where(col(textCol).isNotNull)
-      .select(col(idCol).as("id"),
-        Bridge.column(graft.functions.ShingleMinHashMd5(
-          Bridge.expression(docTokens(col(textCol))), shingleSize, consts)).as("sig"))
-  }
-
-  /** The token array both md5-family shingle expressions start from. */
-  private def docTokens(text: Column): Column =
-    TextOps.tokens(coalesce(text, lit("")))
-
-  /** Driver-side twin of [[md5Hash64]] for literal constants: first 16 hex
-    * chars of the UTF-8 md5, as a signed (two's-complement) long.
-    */
-  def md5Const64(s: String): Long = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.ByteBuffer.wrap(d, 0, 8).getLong
-  }
-
-  /** Oracle-checkable banded-LSH near-dup detection end to end: md5-family
-    * signatures ([[minhashTableMd5]]) → per-band keys (the band's
-    * minhashes in h_idx order, string-joined) → distinct candidate pairs
-    * sharing any band → exact n-gram Jaccard computed ONLY over candidate
-    * ids' shingle sets, kept at `threshold`. Deterministic at every step,
-    * so DuckDB replicates the full pipeline (q80) — the production path
-    * with the same DAG shape but engine-native hashing is
-    * [[minhashNearDups]].
-    *
-    * Scale shape: the signatures are one projection per doc, and the
-    * banded self-join carries (id, band, key) rows only. Verification
-    * semi-joins the docs down to candidate ids, builds each candidate's
-    * distinct shingle strings ([[graft.functions.ShingleSet]], one row per
-    * doc), and joins them onto the candidate pairs:
-    * `n_common` is a merge of the two sorted sets
-    * ([[graft.functions.SortedStringIntersectSize]]) and the set sizes are
-    * `size()`. Verify cost is bounded by the candidate set, never the
-    * corpus. Shingles compare as exact strings, as the oracle's
-    * `list_distinct` sets do.
-    */
-  def minhashNearDupsMd5(df: DataFrame, idCol: String, textCol: String,
-                         nHashes: Int = 16, bands: Int = 4,
-                         shingleSize: Int = 3, threshold: Double = 0.5): DataFrame = {
-    require(nHashes % bands == 0, "nHashes must divide into bands")
-    val r = nHashes / bands
-    // Band keys derive PER ROW from the signature array (round 20): the
-    // long form's ×nHashes explode + groupBy(id, band) + collect_list
-    // re-assembly rebuilt by aggregation what [[minhashSigArrayMd5]]
-    // already holds in h_idx order — each band key is a concat_ws over
-    // an array slice, zero extra exchanges. Key strings are identical
-    // (minhashes in h_idx order, comma-joined); null-text docs are
-    // already absent from the array form, which is what the long form's
-    // isNotNull filter re-established.
-    //
-    // The band table is referenced on both sides of the self-join, the
-    // candidate table twice downstream and the candidate shingle sets on
-    // both sides of the verify join; Spark replans (not reuses) each
-    // reference, re-running its whole subtree per copy. All three are
-    // BOUNDED intermediates (ids x bands rows / candidate pairs /
-    // candidate docs), so pin them (ops.Pin: localCheckpoint in local
-    // mode, reliable checkpoint on a cluster): compute once, reuse
-    // everywhere.
-    val sigs = minhashSigArrayMd5(df, idCol, textCol, nHashes, shingleSize)
-    val banded = sigs
-      .select(col("id"),
-        posexplode(array((0 until bands).map { b =>
-          concat_ws(",", (b * r until (b + 1) * r)
-            .map(i => element_at(col("sig"), i + 1).cast("string")): _*)
-        }: _*)).as(Seq("band", "key")))
-      .select(col("id"), col("band").cast("long").as("band"), col("key"))
-      .transform(graft.ops.Pin.pin)
-    val cands = banded.select(col("id").as("id_a"), col("band"), col("key"))
-      .join(banded.select(col("id").as("id_b"), col("band"), col("key")),
-        Seq("band", "key"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-      .transform(graft.ops.Pin.pin)
-    val candIds = cands
-      .select(explode(array(col("id_a"), col("id_b"))).as(idCol)).distinct()
-    // restrict BEFORE shingling: shingle sets are built for candidate
-    // docs only, not the corpus
-    val sets = df.join(candIds, Seq(idCol), "left_semi")
-      .select(col(idCol).as("id"),
-        Bridge.column(graft.functions.ShingleSet(Bridge.expression(docTokens(col(textCol))),
-          shingleSize)).as("shs"))
-      .transform(graft.ops.Pin.pin)
-    cands
-      .join(sets.select(col("id").as("id_a"), col("shs").as("shs_a")), "id_a")
-      .join(sets.select(col("id").as("id_b"), col("shs").as("shs_b")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        Bridge.column(graft.functions.SortedStringIntersectSize(
-          Bridge.expression(col("shs_a")), Bridge.expression(col("shs_b")))).as("n_common"),
-        size(col("shs_a")).cast("long").as("n_a"),
-        size(col("shs_b")).cast("long").as("n_b"))
-      .withColumn("jaccard",
-        col("n_common").cast("double") / (col("n_a") + col("n_b") - col("n_common")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "n_common", "jaccard")
-  }
-
-  /** Full MinHash+LSH near-dup pipeline: signatures → banded candidates →
-    * exact verification at `threshold`.
-    */
-  def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
-                      threshold: Double = 0.7, numHashes: Int = 64,
-                      bands: Int = 16, shingleSize: Int = 3): DataFrame = {
-    val sigs = minhashSignatures(df, idCol, textCol, numHashes, shingleSize)
-    val cands = minhashCandidates(sigs, idCol, bands, numHashes)
-    verifyJaccard(cands, df, idCol, textCol, shingleSize)
-      .filter(col("jaccard") >= threshold)
   }
 
   // -------------------------------------------------------------- simhash
@@ -1065,9 +913,9 @@ object Dedup {
     * strings and is the collision detector at test scale — never
     * executes. Two lanes put the expectation at N²/2¹²⁹ ≈ 10⁻¹⁹:
     * collision-safe at any physical corpus. (Set-membership uses like
-    * [[verifyJaccard]]'s shingle identities keep the single-lane
-    * trade — there a collision shifts one Jaccard estimate, it does
-    * not fabricate output.)
+    * the prefix-filter joins' [[shingleHashes]] identities keep the
+    * single-lane trade — there a collision shifts one Jaccard estimate,
+    * it does not fabricate output.)
     *
     * Returns one row per (doc, merged span): (doc_id, s, e).
     */

@@ -8,12 +8,11 @@ import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
 /** The engine's cross-engine 64-bit hash (first 8 md5 digest bytes as a
   * big-endian signed long) as a native codegen'd expression.
   *
-  * Bit-identical to the declarative composition in
-  * `graft.dedup.Dedup.md5Hash64Ref` — `conv(hex[1..8],16,10) << 32 |
-  * conv(hex[9..16],16,10)` assembles exactly the first 8 digest bytes in
-  * two's complement — but skips the intermediate hex string encode and
-  * the two base-16 string parses per value (DedupSpec pins equality on
-  * random strings). The dedup/shard/sampling layer computes this hash
+  * Bit-identical to the declarative composition
+  * `conv(hex[1..8],16,10) << 32 | conv(hex[9..16],16,10)`, which
+  * assembles exactly the first 8 digest bytes in two's complement, but
+  * skips the intermediate hex string encode and the two base-16 string
+  * parses per value (TextDedupSpec pins equality on random strings). The dedup/shard/sampling layer computes this hash
   * per shingle × per hash-family member, so the string round-trip is
   * measurable there; the DuckDB oracles are unaffected because the
   * VALUE is unchanged (they replay it via HUGEINT arithmetic on md5

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -12,10 +12,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * The shingles are `Dedup.shingles`' strings: positions 0..len−n, each
   * the n tokens joined with " " (`concat_ws`); a document of fewer than n
   * tokens is one shingle, its whole token list joined. The expressions
-  * below consume them in the same row that tokenized the text, so the
-  * md5 MinHash family's signature and its exact-Jaccard verification
-  * set need no explode, `lead` window, shuffle or per-hash `min`
-  * aggregate: one document in, one value out.
+  * below consume them in the same row that tokenized the text, so a
+  * MinHash signature and its exact-Jaccard verification set need no
+  * explode, `lead` window, shuffle or per-hash `min` aggregate: one
+  * document in, one value out.
   */
 object Shingles {
   private val Space = UTF8String.fromString(" ")
@@ -37,15 +37,48 @@ object Shingles {
     }
 }
 
-/** The md5-family MinHash signature of one document: for hash family i,
-  * the minimum over its shingles of `md5Hash64(shingle) XOR consts(i)`
-  * (`Dedup.minhashSigArrayMd5` owns the constants). The minimum is
+/** A MinHash hash family: the 64-bit hash of one shingle string and the
+  * per-slot xor constants. Slot i maps a shingle hash h to `h XOR c_i`, a
+  * bijection of the hash space, so the slot minima are independent
+  * (a modular-affine family over a folded hash is not: its "permutations"
+  * are monotone in h for half the seeds). Each c_i is the md5-derived
+  * long of a fixed key string, so every family is seeded and replayable.
+  */
+sealed abstract class MinHashFamily(val name: String) extends Serializable {
+  def hash(shingle: UTF8String): Long
+  protected def constKey(i: Int): String
+  def consts(numHashes: Int): Array[Long] = Array.tabulate(numHashes)(i =>
+    Md5Hash64.compute(constKey(i).getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+}
+
+object MinHashFamily {
+  /** [[Md5Hash64]] of the shingle: any engine with md5 and xor replays
+    * every slot bit-for-bit (the DuckDB oracles do).
+    */
+  case object Md5 extends MinHashFamily("md5") {
+    def hash(shingle: UTF8String): Long = Md5Hash64.compute(shingle.getBytes)
+    protected def constKey(i: Int): String = s"graft-minhash#$i"
+  }
+
+  /** Spark's xxhash64 of the shingle's UTF-8 bytes with seed 42 (the value
+    * `xxhash64(col)` gives): cheaper than md5, but Spark-only.
+    */
+  case object XxHash64 extends MinHashFamily("xxhash64") {
+    def hash(shingle: UTF8String): Long = XXH64.hashUTF8String(shingle, 42L)
+    protected def constKey(i: Int): String = s"graft-minhash-xx/42#$i"
+  }
+}
+
+/** The MinHash signature of one document: for slot i, the minimum over its
+  * shingles of `family.hash(shingle) XOR consts(i)`. The minimum is
   * invariant under shingle multiplicity, so repeated shingles are hashed
   * again rather than deduplicated first. A document always has at least
-  * one shingle, so every signature slot is set.
+  * one shingle, so every slot is set.
   */
-case class ShingleMinHashMd5(child: Expression, n: Int, consts: Array[Long])
+case class ShingleMinHash(child: Expression, n: Int, family: MinHashFamily, numHashes: Int)
   extends UnaryExpression {
+
+  @transient private lazy val consts = family.consts(numHashes)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
@@ -53,28 +86,30 @@ case class ShingleMinHashMd5(child: Expression, n: Int, consts: Array[Long])
     Shingles.checkTokens(prettyName, child.dataType)
 
   override def nullSafeEval(input: Any): Any =
-    ShingleMinHashMd5.compute(input.asInstanceOf[ArrayData], n, consts)
+    ShingleMinHash.compute(input.asInstanceOf[ArrayData], n, family, consts)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val fam = ctx.addReferenceObj("minhashFamily", family, classOf[MinHashFamily].getName)
     val cs = ctx.addReferenceObj("minhashConsts", consts, "long[]")
     nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.functions.ShingleMinHashMd5.compute($t, $n, $cs);")
+      s"${ev.value} = graft.functions.ShingleMinHash.compute($t, $n, $fam, $cs);")
   }
 
-  override protected def withNewChildInternal(newChild: Expression): ShingleMinHashMd5 =
+  override protected def withNewChildInternal(newChild: Expression): ShingleMinHash =
     copy(child = newChild)
 
-  // plan strings show the family size, not the array's identity hash
-  override protected def stringArgs: Iterator[Any] = Iterator(child, n, consts.length)
+  // plan strings show the shingle size and the signature length
+  override protected def stringArgs: Iterator[Any] = Iterator(child, n, numHashes)
 
-  override def prettyName: String = "shingle_minhash_md5"
+  override def prettyName: String = s"shingle_minhash_${family.name}"
 }
 
-object ShingleMinHashMd5 {
-  def compute(tokens: ArrayData, n: Int, consts: Array[Long]): ArrayData = {
+object ShingleMinHash {
+  def compute(tokens: ArrayData, n: Int, family: MinHashFamily,
+              consts: Array[Long]): ArrayData = {
     val sig = Array.fill(consts.length)(Long.MaxValue)
     for (s <- Shingles.of(tokens, n)) {
-      val h = Md5Hash64.compute(s.getBytes)
+      val h = family.hash(s)
       var i = 0
       while (i < sig.length) {
         val v = h ^ consts(i)

@@ -96,8 +96,9 @@ object Series {
         |WINDOW w AS (ORDER BY day)
         |ORDER BY 1""".stripMargin) { (s, dir) =>
       val daily = dailySeries(s, dir).drop("n_events")
-      val lagged = Lags.withLags(daily, "val", Seq("day"), Seq(1, 2, 7))
-      Lags.withDiff(lagged, "val", Seq("day"), 1, "diff1")
+      // diff1 reuses val_lag1: a second lag(val, 1) would add a window frame
+      Lags.withLags(daily, "val", Seq("day"), Seq(1, 2, 7))
+        .withColumn("diff1", col("val") - col("val_lag1"))
         .withColumn("day", date_format(col("day"), iso))
         .orderBy("day")
     },

@@ -5,6 +5,7 @@ import graft.Tables._
 import graft.ops.Exact.davg
 import graft.text.{Packing, TextOps}
 import graft.dedup.Dedup
+import graft.functions.MinHashFamily
 import graft.sketch.Sketch
 import graft.sim.Similarity
 import graft.multimodal.Multimodal
@@ -500,7 +501,7 @@ object Text {
     // ---- banded-LSH near-dup pipeline, oracle-checked end to end ----
     // Signatures (md5+xor family) -> band keys -> candidate pairs ->
     // exact Jaccard verify restricted to candidates. Hash-checks the whole
-    // LSH DAG; the production twin (engine hashing, bucket caps) is q44.
+    // LSH DAG, which q44 runs under the xxhash64 family with a bucket cap.
     Q("q80_lsh_neardups",
       s"""WITH toks AS (
         |  SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS t FROM documents),
@@ -532,17 +533,19 @@ object Text {
         |JOIN sizes sb ON sb.doc_id = m.id_b
         |WHERE CAST(m.n_common AS DOUBLE) / (sa.nsh + sb.nsh - m.n_common) >= 0.5
         |ORDER BY id_a, id_b""".stripMargin) { (s, dir) =>
-      Dedup.minhashNearDupsMd5(documents(s, dir), "doc_id", "text",
-        nHashes = 16, bands = 4, shingleSize = 3, threshold = 0.5)
+      Dedup.minhashNearDups(documents(s, dir), "doc_id", "text", MinHashFamily.Md5,
+        nHashes = 16, bands = 4, shingleSize = 3)
+        .filter(col("jaccard") >= 0.5)
         .orderBy("id_a", "id_b")
     },
 
     // ---- MinHash+LSH near-dup scan summary (1-row aggregate) ----
+    // q80's DAG under the Spark-only xxhash64 family: 64 hashes, 16
+    // bands, hot buckets capped at 1000 members, every candidate counted.
     Q.noOracle("q44_minhash_neardup_stats") { (s, dir) =>
       val docs = documents(s, dir)
-      val sigs = Dedup.minhashSignatures(docs, "doc_id", "text")
-      val cands = Dedup.minhashCandidates(sigs, "doc_id", bands = 16)
-      Dedup.verifyJaccard(cands, docs, "doc_id", "text")
+      Dedup.minhashNearDups(docs, "doc_id", "text", MinHashFamily.XxHash64,
+          nHashes = 64, bands = 16, maxBucketSize = 1000)
         .agg(count(lit(1)).as("n_candidates"),
           count(when(col("jaccard") >= 0.7, 1)).as("n_dups_07"),
           coalesce(max(col("jaccard")), lit(0.0)).as("max_jaccard"))
@@ -1243,8 +1246,9 @@ object Text {
         |SELECT group_id, id AS doc_id,
         |  CAST(COUNT(*) OVER (PARTITION BY group_id) AS BIGINT) AS n_members
         |FROM comp ORDER BY group_id, doc_id""".stripMargin) { (s, dir) =>
-      val pairs = Dedup.minhashNearDupsMd5(documents(s, dir), "doc_id", "text",
-        nHashes = 16, bands = 4, shingleSize = 3, threshold = 0.5)
+      val pairs = Dedup.minhashNearDups(documents(s, dir), "doc_id", "text",
+          MinHashFamily.Md5, nHashes = 16, bands = 4, shingleSize = 3)
+        .filter(col("jaccard") >= 0.5)
         .select("id_a", "id_b")
       val w = org.apache.spark.sql.expressions.Window.partitionBy("group_id")
       Dedup.dupGroups(pairs)
@@ -2432,8 +2436,9 @@ object Text {
         |    ORDER BY quality DESC, doc_id) AS kept
         |FROM m ORDER BY group_id, doc_id""".stripMargin) { (s, dir) =>
       val docs = documents(s, dir)
-      val pairs = Dedup.minhashNearDupsMd5(docs, "doc_id", "text",
-        nHashes = 16, bands = 4, shingleSize = 3, threshold = 0.5)
+      val pairs = Dedup.minhashNearDups(docs, "doc_id", "text", MinHashFamily.Md5,
+        nHashes = 16, bands = 4, shingleSize = 3)
+        .filter(col("jaccard") >= 0.5)
         .select("id_a", "id_b")
       val groups = Dedup.dupGroups(pairs)
         .select(col("group_id"), col("id").as("doc_id"))
@@ -2538,11 +2543,12 @@ object Text {
         .agg(min(struct(col("doc_id"), col("__ntok"), col("quality"))).as("__k"))
         .select(col("__k.doc_id").as("doc_id"), col("__fp"),
           col("__k.__ntok").as("__ntok"), col("__k.quality").as("quality")))
-      val pairs = Dedup.minhashNearDupsMd5(
+      val pairs = Dedup.minhashNearDups(
           docs.join(exact.select("doc_id"), Seq("doc_id"), "left_semi")
             .select("doc_id", "text"),
-          "doc_id", "text", nHashes = 16, bands = 4, shingleSize = 3,
-          threshold = 0.5)
+          "doc_id", "text", MinHashFamily.Md5, nHashes = 16, bands = 4,
+          shingleSize = 3)
+        .filter(col("jaccard") >= 0.5)
         .select("id_a", "id_b")
       val groups = Dedup.dupGroups(pairs)
         .select(col("group_id"), col("id").as("doc_id"))
@@ -2639,8 +2645,9 @@ object Text {
         |SELECT doc_id, reason FROM rem ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val docs = documents(s, dir)
       val seeds = docs.filter(col("doc_id") % 97 === 0).select("doc_id")
-      val pairs = Dedup.minhashNearDupsMd5(docs, "doc_id", "text",
-        nHashes = 16, bands = 4, shingleSize = 3, threshold = 0.5)
+      val pairs = Dedup.minhashNearDups(docs, "doc_id", "text", MinHashFamily.Md5,
+        nHashes = 16, bands = 4, shingleSize = 3)
+        .filter(col("jaccard") >= 0.5)
         .select("id_a", "id_b")
       val groups = Dedup.dupGroups(pairs)
         .select(col("group_id"), col("id").as("doc_id"))
@@ -3094,8 +3101,9 @@ object Text {
       val exact = graft.ops.Pin.pin(
         Dedup.jaccardPairs(docs, "doc_id", "text", shingleSize = 3,
           threshold = 0.5).select("id_a", "id_b"))
-      val lsh = Dedup.minhashNearDupsMd5(docs, "doc_id", "text",
-        nHashes = 16, bands = 4, shingleSize = 3, threshold = 0.5)
+      val lsh = Dedup.minhashNearDups(docs, "doc_id", "text", MinHashFamily.Md5,
+        nHashes = 16, bands = 4, shingleSize = 3)
+        .filter(col("jaccard") >= 0.5)
         .select("id_a", "id_b")
       exact.withColumn("ex", lit(1))
         .join(lsh.withColumn("ls", lit(1)), Seq("id_a", "id_b"), "full_outer")
@@ -3521,8 +3529,9 @@ object Text {
         |FROM lab GROUP BY 1, 2, 4 ORDER BY split_lo, split_hi""".stripMargin) {
       (s, dir) =>
       val docs = documents(s, dir)
-      val pairs = Dedup.minhashNearDupsMd5(docs, "doc_id", "text",
-        nHashes = 16, bands = 4, shingleSize = 3, threshold = 0.5)
+      val pairs = Dedup.minhashNearDups(docs, "doc_id", "text", MinHashFamily.Md5,
+        nHashes = 16, bands = 4, shingleSize = 3)
+        .filter(col("jaccard") >= 0.5)
         .select("id_a", "id_b")
       val sp = graft.ops.Splits.hashSplit(docs.select("doc_id"), "doc_id",
         "#split", Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
@@ -3709,8 +3718,9 @@ object Text {
       val exact = graft.ops.Pin.pin(
         Dedup.prefixJaccardPairs(sdocs, "doc_id", "text", shingleSize = 3,
           threshold = 0.5).select("id_a", "id_b"))
-      val lsh = Dedup.minhashNearDupsMd5(sdocs, "doc_id", "text",
-        nHashes = 16, bands = 4, shingleSize = 3, threshold = 0.5)
+      val lsh = Dedup.minhashNearDups(sdocs, "doc_id", "text", MinHashFamily.Md5,
+        nHashes = 16, bands = 4, shingleSize = 3)
+        .filter(col("jaccard") >= 0.5)
         .select("id_a", "id_b")
       val nSampled = sdocs.agg(count(lit(1)).as("n_sampled"))
       exact.withColumn("ex", lit(1))

@@ -41,7 +41,7 @@ object Quantize {
     * 0..255 code per dimension; a degenerate dimension with min = max
     * encodes 0), `err` (squared L2 reconstruction error — per-element
     * double arithmetic captured into the exact DECIMAL sum, the
-    * sqDistExactHof protocol; left as the exact decimal so consumers
+    * `Similarity.sqDistExact` protocol; left as the exact decimal so consumers
     * choose their own readout snap).
     */
   def sq8(df: DataFrame, vecCol: String,

@@ -23,18 +23,10 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Similarity {
 
-  /** Capture type for exact dot products: scale 18 keeps the full decimal
-    * expansion that matters for the final double rounding; precision 28
-    * leaves 10 integer digits of headroom so the per-step cast below never
-    * rounds. (Precision 38 would make Spark demote the fold's `+` result
-    * to scale 17, silently rounding each step.)
-    */
-  private val D = DecimalType(28, 18)
-
   /** Exact deterministic dot product of two numeric-array columns via the
     * native codegen'd expression [[graft.functions.ExactDotProduct]]
     * (identical semantics to the ANSI `SUM(CAST(a[i]*b[i] AS
-    * DECIMAL(38,18)))`; see [[dotExactHof]] for the declarative form).
+    * DECIMAL(38,18)))`; the specs pin it to a declarative decimal fold).
     */
   def dotExact(a: Column, b: Column): Column =
     org.apache.spark.sql.graft.Bridge.column(
@@ -42,32 +34,14 @@ object Similarity {
         org.apache.spark.sql.graft.Bridge.expression(a),
         org.apache.spark.sql.graft.Bridge.expression(b)))
 
-  /** Declarative higher-order-function form of [[dotExact]] — same values
-    * bit-for-bit, kept as the portable reference implementation (the
-    * lambda is evaluated interpreted per element, ~an order of magnitude
-    * slower in tight loops).
-    */
-  def dotExactHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => (x.cast("double") * y.cast("double")).cast(D)),
-      lit(java.math.BigDecimal.ZERO).cast(D),
-      (acc, x) => (acc + x).cast(D)).cast("double")
-
   /** Fast double dot product (sequential fold — deterministic per row).
-    * Native codegen'd expression; see [[dotHof]] for the declarative twin.
+    * Native codegen'd expression, pinned to a declarative fold by spec.
     */
   def dot(a: Column, b: Column): Column =
     org.apache.spark.sql.graft.Bridge.column(
       graft.functions.DoubleDotProduct(
         org.apache.spark.sql.graft.Bridge.expression(a),
         org.apache.spark.sql.graft.Bridge.expression(b)))
-
-  /** Higher-order-function reference form of [[dot]] (identical
-    * left-to-right IEEE addition; interpreted per element).
-    */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
 
   /** L2 norm (exact-sum variant). */
   def normExact(a: Column): Column = sqrt(dotExact(a, a))
@@ -932,35 +906,15 @@ object Similarity {
 
   /** Exact squared-L2 distance via the decimal capture — returns the
     * DECIMAL sum (no double rounding) so downstream argmins and ADC
-    * additions stay exact and order-free. Native codegen'd expression;
-    * see [[sqDistExactHof]] for the declarative twin.
+    * additions stay exact and order-free. Native codegen'd expression,
+    * pinned to a declarative decimal fold by spec (q120 measured
+    * 4.0 → 3.6 s when it replaced that fold).
     */
   def sqDistExact(a: Column, b: Column): Column =
     org.apache.spark.sql.graft.Bridge.column(
       graft.functions.ExactSqDist(
         org.apache.spark.sql.graft.Bridge.expression(a),
         org.apache.spark.sql.graft.Bridge.expression(b)))
-
-  /** Declarative higher-order-function form of [[sqDistExact]] — same
-    * values bit-for-bit on dense equal-length arrays whose per-element
-    * squared differences stay under DECIMAL(28,18)'s 10 integer digits
-    * (|x−y| < ~10⁵ — every embedding here; beyond that this form's
-    * element cast nulls out while the native form, accumulating at
-    * precision 38, still returns the finite sum). Kept as the portable
-    * reference implementation (interpreted per element;
-    * q120 measured 4.0 → 3.6 s when the native form replaced it — the
-    * query is dominated by its encode shuffle, not the scalar, but the
-    * native form keeps the scoring projection inside whole-stage
-    * codegen at corpus scale).
-    */
-  def sqDistExactHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => {
-        val d = x.cast("double") - y.cast("double")
-        (d * d).cast(D)
-      }),
-      lit(java.math.BigDecimal.ZERO).cast(D),
-      (acc, x) => (acc + x).cast(D))
 
   /** Per-subspace codebook rows (j, code, cvec): the k corpus vectors
     * with the smallest (md5(id), id) — deterministic, shuffle-invariant —

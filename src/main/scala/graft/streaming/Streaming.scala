@@ -154,8 +154,8 @@ object Streaming {
 
   /** Document with a precomputed MinHash signature (one row per doc;
     * attach signatures at ingestion with
-    * [[graft.dedup.Dedup.minhashSignatureExpr]] — a pure projection, so
-    * it runs on the stream with no stateful aggregation).
+    * [[graft.dedup.Dedup.minhashSignatures]] — one projection, so it runs
+    * on the stream with no stateful aggregation).
     */
   final case class SigDoc(id: Long, sig: Seq[Long])
   /** One doc occurrence in one LSH band bucket. */
@@ -167,9 +167,11 @@ object Streaming {
     */
   final case class NearDupVote(id: Long, bucket: Long, dup: Boolean)
 
-  /** Pack (band, 32-bit bucket hash) into one long key — same bucketing
-    * as the batch `minhashCandidates` banding, collision-free across
-    * bands by construction.
+  /** Pack (band, 32-bit hash of the band's slots) into one long state
+    * key, collision-free across bands by construction. The batch
+    * [[graft.dedup.Dedup.minhashCandidates]] keys on the exact band
+    * string instead; here a within-band hash collision only adds one
+    * est-sim comparison against another bucket's representative.
     */
   private def bandBuckets(bands: Int, r: Int) =
     transform(sequence(lit(0), lit(bands - 1)),

@@ -101,7 +101,7 @@ object LangModel {
     * order with occurrence multiplicity: gram = hash of
     * ((n−1)-token context string, successor token), context and
     * successor as 8-byte keys on their own (the
-    * [[graft.dedup.Dedup.verifyJaccard]] 64-bit-identity trade; the
+    * [[graft.dedup.Dedup.shingleHashes]] 64-bit-identity trade; the
     * q195/q197 oracles replay true strings and double as the collision
     * detectors). At n = 2 this is exactly the historical bigram
     * hashing — gh = xxhash64(u, v), ch = xxhash64(u), vh = xxhash64(v)
@@ -256,7 +256,7 @@ object LangModel {
     * (VERDICT r12 item 3 — the wrapper's split label now rides the same
     * single scan). Gram/context/successor travel as 64-BIT xxhash64
     * identities, never strings — the [[graft.dedup.Dedup]]
-    * shingle-identity trade (`verifyJaccard`'s "64-bit identities"):
+    * shingle-identity trade ([[graft.dedup.Dedup.shingleHashes]]):
     * every shuffle and join key is 8 bytes, and the q195/q197/q201
     * oracles, which replay the protocol over the TRUE strings, double
     * as the collision detectors at test scale (a 64-bit collision

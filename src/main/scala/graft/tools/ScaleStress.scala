@@ -1221,9 +1221,9 @@ object ScaleStress {
     // The two named 100 TB skew mitigations measured against their naive
     // twins on the SAME planted skew, at the same sizes:
     //  * LSH hot bucket: 1% boilerplate docs collide into one
-    //    (band, hash) bucket per band; uncapped, the candidate self-join
+    //    (band, key) bucket per band; uncapped, the candidate self-join
     //    emits ~(n/100)²/2 pairs from that bucket — `Dedup.capBuckets`
-    //    (ops default maxBucketSize = 1000) bounds every bucket's
+    //    (maxBucketSize = 1000, q44's cap) bounds every bucket's
     //    contribution. AQE cannot help here: the cost is quadratic
     //    OUTPUT VOLUME, not task imbalance.
     //  * join skew: hot key at ×100 the mean; the mitigated path
@@ -1259,9 +1259,9 @@ object ScaleStress {
       def lsh(cap: Int): Long = {
         val sigs = graft.dedup.Dedup.minhashSignatures(
           skewDocuments(spark, nDocs), "doc_id", "text",
-          numHashes = 16, shingleSize = 3)
-        graft.dedup.Dedup.minhashCandidates(sigs, "doc_id",
-          bands = 4, numHashes = 16, maxBucketSize = cap).count()
+          graft.functions.MinHashFamily.XxHash64, nHashes = 16)
+        graft.dedup.Dedup.minhashCandidates(sigs, nHashes = 16, bands = 4,
+          maxBucketSize = cap).count()
       }
       if (mode != "skew-join" && mode != "skew-aqe") {
         run("lsh_hot_bucket_naive") { lsh(Int.MaxValue) }
@@ -1317,8 +1317,9 @@ object ScaleStress {
     runCore("neardup_components_keepbest") {
       val docs = documents(spark, nDocs)
       val pairs = graft.dedup.Dedup.minhashNearDups(
-        docs, "doc_id", "text", threshold = 0.5,
-        numHashes = 16, bands = 4, shingleSize = 3)
+          docs, "doc_id", "text", graft.functions.MinHashFamily.XxHash64,
+          nHashes = 16, bands = 4, maxBucketSize = 1000)
+        .filter(col("jaccard") >= 0.5)
         .select(col("id_a"), col("id_b"))
       val groups = graft.dedup.Dedup.dupGroups(pairs)
       // keep the smallest id of each component; singletons (no pair)

@@ -138,7 +138,7 @@ class PqSpec extends AnyFunSuite {
       reverse(col("embedding")).as("b"))
     val got = df.select(
       Similarity.sqDistExact(col("a"), col("b")).as("n"),
-      Similarity.sqDistExactHof(col("a"), col("b")).as("h")).collect()
+      ReferenceForms.sqDistExactHof(col("a"), col("b")).as("h")).collect()
     got.foreach { r =>
       assert(r.getDecimal(0).compareTo(r.getDecimal(1)) === 0,
         s"native ${r.getDecimal(0)} != hof ${r.getDecimal(1)}")

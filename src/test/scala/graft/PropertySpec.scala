@@ -181,7 +181,8 @@ class PropertySpec extends AnyFunSuite {
     for (n <- Seq(1, 3)) {
       val sets = docs.select(col("doc_id"), shingleRef(n).as("sh")).collect()
         .map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
-      val sigs = Dedup.minhashSigArrayMd5(docs, "doc_id", "text", 16, n).collect()
+      val sigs = Dedup.minhashSignatures(docs, "doc_id", "text",
+        graft.functions.MinHashFamily.Md5, 16, n).collect()
       assert(sigs.length === sets.size)
       sigs.foreach { r =>
         val sh = sets(r.getLong(0))
@@ -197,6 +198,25 @@ class PropertySpec extends AnyFunSuite {
         .collect()
       pairs.foreach(r => assert(r.getLong(2) ===
         (sets(r.getLong(0)).toSet & sets(r.getLong(1)).toSet).size, s"n=$n $r"))
+    }
+  }
+
+  test("xxhash64 MinHash signature ≡ driver-side min over Spark's xxhash64 of Dedup.shingles") {
+    import graft.dedup.Dedup
+    val docs = unicodeDocs
+    val consts = (0 until 64).map(i => Dedup.md5Const64(s"graft-minhash-xx/42#$i"))
+    for (n <- Seq(1, 3)) {
+      val hashes = docs.select(col("doc_id"), explode(shingleRef(n)).as("s"))
+        .select(col("doc_id"), xxhash64(col("s"))).collect()
+        .groupBy(_.getLong(0)).map { case (id, rs) => id -> rs.map(_.getLong(1)) }
+      val sigs = Dedup.minhashSignatures(docs, "doc_id", "text",
+        graft.functions.MinHashFamily.XxHash64, 64, n).collect()
+      assert(sigs.length === hashes.size)
+      sigs.foreach { r =>
+        val hs = hashes(r.getLong(0))
+        assert(r.getSeq[Long](1) === consts.map(c => hs.map(_ ^ c).min),
+          s"n=$n doc ${r.getLong(0)}")
+      }
     }
   }
 

@@ -614,21 +614,17 @@ class StreamingSpec extends AnyFunSuite {
         .sortBy(_._1)
     val (bands, numHashes, tau) = (16, 64, 0.5)
 
-    // the pure-expression signature must equal the aggregated batch path
-    val docsDf = corpus.toDF("id", "text")
-    val viaExpr = docsDf.select(col("id"),
-      D.minhashSignatureExpr(col("text")).as("sig"))
-    val viaAgg = D.minhashSignatures(docsDf, "id", "text")
-    val eMap = viaExpr.collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val aMap = viaAgg.collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    assert(eMap === aMap, "minhashSignatureExpr diverged from minhashSignatures")
+    // signatures attach with the batch path's own projection
+    val sigs = D.minhashSignatures(corpus.toDF("id", "text"), "id", "text",
+      graft.functions.MinHashFamily.XxHash64, numHashes)
+    val eMap = sigs.collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
 
     // batch votes on the full corpus
     def votesMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("id"), r.getAs[Long]("bucket")) -> r.getAs[Boolean]("dup"))
       .toMap
     val batchVotes = votesMap(
-      Streaming.nearDupVotesBatch(viaExpr, bands, numHashes, tau))
+      Streaming.nearDupVotesBatch(sigs, bands, numHashes, tau))
 
     // streaming: same rows over three uneven micro-batches, ascending ids
     val sigDocs = corpus.map { case (id, _) => Streaming.SigDoc(id, eMap(id)) }

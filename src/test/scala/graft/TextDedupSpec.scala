@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.dedup.Dedup
+import graft.functions.MinHashFamily
 import graft.sim.Similarity
 import graft.text.TextOps
 import graft.multimodal.Multimodal
@@ -22,6 +23,11 @@ class TextDedupSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(seed)
     Seq.fill(n)(words(rnd.nextInt(words.length))).mkString(" ")
   }
+
+  /** q44's near-dup DAG: xxhash64 family, 64 hashes, 16 bands, cap 1000. */
+  private def xxNearDups(docs: org.apache.spark.sql.DataFrame) =
+    Dedup.minhashNearDups(docs, "doc_id", "text", MinHashFamily.XxHash64,
+      nHashes = 64, bands = 16, maxBucketSize = 1000)
 
   test("dupGroups closes components: clique, chain, isolated pair (both paths)") {
     // clique {1,2,3}, a 5-node CHAIN 10-11-12-13-14 (diameter 4 — needs
@@ -223,12 +229,12 @@ class TextDedupSpec extends AnyFunSuite {
     val df = strs.toDF("s")
     val rows = df.select(
         Dedup.md5Hash64(col("s")).as("fast"),
-        Dedup.md5Hash64Ref(col("s")).as("ref"))
+        ReferenceForms.md5Hash64Ref(col("s")).as("ref"))
       .collect()
     rows.foreach(r => assert(r.getLong(0) === r.getLong(1)))
     // and the interpreted (non-codegen) path agrees too
     val interp = df.selectExpr("s").filter(
-      Dedup.md5Hash64(col("s")) =!= Dedup.md5Hash64Ref(col("s"))).count()
+      Dedup.md5Hash64(col("s")) =!= ReferenceForms.md5Hash64Ref(col("s"))).count()
     assert(interp === 0L)
   }
 
@@ -294,14 +300,14 @@ class TextDedupSpec extends AnyFunSuite {
     val nearDup = base.split(" ").updated(5, "changed").mkString(" ")
     val docs = (Seq((0L, base), (1L, nearDup)) ++
       (2L to 9L).map(i => (i, mkDoc(100 + i.toInt, 120)))).toDF("doc_id", "text")
-    val dups = Dedup.minhashNearDups(docs, "doc_id", "text", threshold = 0.7)
+    val dups = xxNearDups(docs).filter(col("jaccard") >= 0.7)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(dups.contains((0L, 1L)), "planted near-dup pair not recalled")
     assert(!dups.exists(p => p._1 >= 2L), s"false-positive pairs: $dups")
   }
 
   test("minhash near-dup final plan reads pinned intermediates, not re-derived shingles") {
-    // Signatures/banding are localCheckpoint-pinned in minhashCandidates
+    // Banding and candidates are localCheckpoint-pinned in minhashCandidates
     // and verifyJaccard shingles only candidate docs into another pinned
     // table — so the FINAL plan must be joins over materialized RDD scans
     // with no shingle/hash re-derivation left in it (the pre-round-4 plan
@@ -310,7 +316,7 @@ class TextDedupSpec extends AnyFunSuite {
     val nearDup = base.split(" ").updated(5, "changed").mkString(" ")
     val docs = (Seq((0L, base), (1L, nearDup)) ++
       (2L to 9L).map(i => (i, mkDoc(100 + i.toInt, 120)))).toDF("doc_id", "text")
-    val out = Dedup.minhashNearDups(docs, "doc_id", "text", threshold = 0.7)
+    val out = xxNearDups(docs).filter(col("jaccard") >= 0.7)
     val plan = out.queryExecution.optimizedPlan.toString
     assert(!plan.contains("posexplode"), s"shingle generation re-derived:\n$plan")
     assert(!plan.contains("xxhash64"), s"shingle hashing re-derived:\n$plan")
@@ -340,7 +346,7 @@ class TextDedupSpec extends AnyFunSuite {
     }
     val df = pairs.zipWithIndex.flatMap { case ((a, b), i) =>
       Seq((i.toLong * 2, a), (i.toLong * 2 + 1, b)) }.toDF("doc_id", "text")
-    val sigs = Dedup.minhashSignatures(df, "doc_id", "text", numHashes = 128)
+    val sigs = Dedup.minhashSignatures(df, "doc_id", "text", MinHashFamily.XxHash64, 128)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val shs = df.select(col("doc_id"), Dedup.shingles(col("text"), 3).as("sh"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1).toSet).toMap
@@ -356,7 +362,7 @@ class TextDedupSpec extends AnyFunSuite {
   }
 
   // Edge-case corpus for the md5 MinHash family (q79/q80 and every
-  // consumer of minhashNearDupsMd5): null, empty and whitespace-only text
+  // md5-family consumer of minhashNearDups): null, empty and whitespace-only text
   // ("  \t " trims to a tab, two empty tokens, shingle " "), a doc under
   // 3 tokens, a doc that repeats shingles (7 has 6's shingle SET), non-
   // ASCII text (9 lowercases to 8; 10 changes 8's last token), and a
@@ -388,7 +394,8 @@ class TextDedupSpec extends AnyFunSuite {
       .map(rec => "#" + rec.split("\\s+").mkString(" ")).mkString("\n")
     assert(gotTable === wantTable)
     def pairs(threshold: Double) =
-      Dedup.minhashNearDupsMd5(md5Corpus, "doc_id", "text", threshold = threshold)
+      Dedup.minhashNearDups(md5Corpus, "doc_id", "text", MinHashFamily.Md5, 16, bands = 4)
+        .filter(col("jaccard") >= threshold)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           java.lang.Double.doubleToLongBits(r.getDouble(3)))).sorted.toSeq
     val at05 = pairs(0.5)
@@ -401,7 +408,7 @@ class TextDedupSpec extends AnyFunSuite {
 
   test("md5 MinHash signatures are bit-identical over repartition(7) input") {
     def sigs(df: org.apache.spark.sql.DataFrame) =
-      Dedup.minhashSigArrayMd5(df, "doc_id", "text", 16, 3)
+      Dedup.minhashSignatures(df, "doc_id", "text", MinHashFamily.Md5, 16)
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val a = sigs(md5Corpus)
     assert(a.size === 12 && a.values.forall(_.length == 16))
@@ -409,12 +416,13 @@ class TextDedupSpec extends AnyFunSuite {
   }
 
   test("md5 MinHash signature stage is one projection over the scan") {
-    // the pins inside minhashNearDupsMd5 and q158 hide this stage from
+    // the pins inside minhashNearDups and q158 hide this stage from
     // their final plans, so it is checked on its own: no shingle explode,
     // no lead window, no shuffle and no per-hash min aggregate
     val path = java.nio.file.Files.createTempDirectory("graft_md5sig").resolve("docs").toString
     md5Corpus.write.parquet(path)
-    val p = Dedup.minhashSigArrayMd5(spark.read.parquet(path), "doc_id", "text", 16, 3)
+    val p = Dedup.minhashSignatures(spark.read.parquet(path), "doc_id", "text",
+        MinHashFamily.Md5, 16)
       .queryExecution.executedPlan.toString
     assert(p.contains("shingle_minhash_md5") && p.contains("FileScan"),
       s"native signature projection missing from:\n$p")
@@ -426,6 +434,36 @@ class TextDedupSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert("shingle_minhash_md5".r.findAllIn(t).length === 1,
       s"signature evaluated more than once in:\n$t")
+  }
+
+  test("xxhash64 MinHash signature stage is one projection over the scan") {
+    // same check as the md5 family's: q44's signatures are one native
+    // projection, with no shingle explode, lead window, shuffle or
+    // per-hash min aggregate
+    val path = java.nio.file.Files.createTempDirectory("graft_xxsig").resolve("docs").toString
+    md5Corpus.write.parquet(path)
+    val p = Dedup.minhashSignatures(spark.read.parquet(path), "doc_id", "text",
+        MinHashFamily.XxHash64, 64)
+      .queryExecution.executedPlan.toString
+    assert(p.contains("shingle_minhash_xxhash64") && p.contains("FileScan"),
+      s"native signature projection missing from:\n$p")
+    for (node <- Seq("Exchange", "Window", "Generate", "Aggregate"))
+      assert(!p.contains(node), s"$node in the signature stage:\n$p")
+  }
+
+  test("null text gets no MinHash signature and is never a candidate") {
+    for (family <- Seq(MinHashFamily.Md5, MinHashFamily.XxHash64)) {
+      val ids = Dedup.minhashSignatures(md5Corpus, "doc_id", "text", family, 16)
+        .select("id").as[Long].collect().toSet
+      assert(ids === (2L to 13L).toSet, s"family ${family.name}")
+    }
+    // doc 1 (null) is not read as "": it pairs with no doc, not even the
+    // empty doc 2, and every other candidate row is unchanged
+    val got = xxNearDups(md5Corpus)
+      .select("id_a", "id_b", "jaccard").collect()
+      .map(r => (r.getLong(0), r.getLong(1),
+        java.lang.Double.doubleToLongBits(r.getDouble(2)))).sorted.toSeq
+    assert(got === xxPairsPin)
   }
 
   // (id_a, id_b, n_common, doubleToLongBits(jaccard)): 1.0, 7/9 and 26/50
@@ -499,10 +537,11 @@ class TextDedupSpec extends AnyFunSuite {
 
   test("minhash signatures are deterministic and length numHashes") {
     val docs = (0L to 4L).map(i => (i, mkDoc(i.toInt, 50))).toDF("doc_id", "text")
-    val a = Dedup.minhashSignatures(docs, "doc_id", "text", numHashes = 32)
-      .orderBy("doc_id").collect().map(_.getSeq[Long](1))
-    val b = Dedup.minhashSignatures(docs.repartition(7), "doc_id", "text", numHashes = 32)
-      .orderBy("doc_id").collect().map(_.getSeq[Long](1))
+    val a = Dedup.minhashSignatures(docs, "doc_id", "text", MinHashFamily.XxHash64, 32)
+      .orderBy("id").collect().map(_.getSeq[Long](1))
+    val b = Dedup.minhashSignatures(docs.repartition(7), "doc_id", "text",
+        MinHashFamily.XxHash64, 32)
+      .orderBy("id").collect().map(_.getSeq[Long](1))
     assert(a.forall(_.length == 32))
     assert(a.map(_.toSeq).toSeq === b.map(_.toSeq).toSeq,
       "signatures changed under repartitioning")
@@ -523,14 +562,13 @@ class TextDedupSpec extends AnyFunSuite {
 
   test("xxhash64 MinHash signatures and q44's candidate rows are pinned bit-exactly") {
     for ((numHashes, want) <- Seq(64 -> xxSig64Pin, 128 -> xxSig128Pin)) {
-      val got = Dedup.minhashSignatures(xxCorpus, "doc_id", "text", numHashes = numHashes)
+      val got = Dedup.minhashSignatures(xxCorpus, "doc_id", "text",
+          MinHashFamily.XxHash64, numHashes)
         .collect().map(r => r.getLong(0) -> sigDigest(r.getSeq[Long](1))).toMap
       assert(got === want, s"numHashes = $numHashes")
     }
     // q44's DAG: 64 hashes, 16 bands, bucket cap 1000, every candidate
-    val cands = Dedup.minhashCandidates(
-      Dedup.minhashSignatures(xxCorpus, "doc_id", "text"), "doc_id", bands = 16)
-    val got = Dedup.verifyJaccard(cands, xxCorpus, "doc_id", "text")
+    val got = xxNearDups(xxCorpus)
       .select("id_a", "id_b", "jaccard").collect()
       .map(r => (r.getLong(0), r.getLong(1),
         java.lang.Double.doubleToLongBits(r.getDouble(2)))).sorted.toSeq
@@ -808,7 +846,7 @@ class ExactDotSpec extends org.scalatest.funsuite.AnyFunSuite {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001").limit(100)
     val both = emb.select(
       graft.sim.Similarity.dotExact(col("embedding"), col("embedding")).as("native"),
-      graft.sim.Similarity.dotExactHof(col("embedding"), col("embedding")).as("hof"))
+      ReferenceForms.dotExactHof(col("embedding"), col("embedding")).as("hof"))
     val bad = both.filter(col("native") =!= col("hof")).count()
     assert(bad === 0L, "native and HOF dot products must be identical")
   }
@@ -817,7 +855,7 @@ class ExactDotSpec extends org.scalatest.funsuite.AnyFunSuite {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001").limit(100)
     val both = emb.select(
       graft.sim.Similarity.dot(col("embedding"), col("embedding")).as("native"),
-      graft.sim.Similarity.dotHof(col("embedding"), col("embedding")).as("hof"))
+      ReferenceForms.dotHof(col("embedding"), col("embedding")).as("hof"))
     val bad = both.filter(col("native") =!= col("hof")).count()
     assert(bad === 0L, "native and HOF double dots must be identical")
   }
