@@ -205,9 +205,10 @@ object Dedup {
     * of [[minhashSignatures]]' rows: the signature splits into `bands`
     * bands of nHashes/bands slots, and docs whose band key is equal in any
     * band become a candidate pair. A band key is the band's minhashes in
-    * slot order, comma-joined: exact, so two docs share a bucket only if
-    * their band slots are equal (no bucket-hash collision adds pairs), and
-    * it derives per row from the signature array with no extra exchange.
+    * slot order, as an array of r longs: exact, so two docs share a bucket
+    * only if their band slots are equal (no bucket-hash collision adds
+    * pairs), fixed-width (8r bytes of values), and it derives per row from
+    * the signature array with no extra exchange.
     *
     * `maxBucketSize` caps the membership of each (band, key) bucket before
     * the self-join, keeping its `maxBucketSize` smallest ids: a degenerate
@@ -227,10 +228,8 @@ object Dedup {
     val r = nHashes / bands
     val banded = sigs
       .select(col("id"),
-        posexplode(array((0 until bands).map { b =>
-          concat_ws(",", (b * r until (b + 1) * r)
-            .map(i => element_at(col("sig"), i + 1).cast("string")): _*)
-        }: _*)).as(Seq("band", "key")))
+        posexplode(array((0 until bands).map(b =>
+          slice(col("sig"), b * r + 1, r)): _*)).as(Seq("band", "key")))
       .select(col("id"), col("band").cast("long").as("band"), col("key"))
     val capped = capBuckets(banded, "id", Seq("band", "key"), maxBucketSize)
       .transform(graft.ops.Pin.pin)

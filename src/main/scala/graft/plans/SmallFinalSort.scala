@@ -1,8 +1,10 @@
 package graft.plans
 
+import org.apache.spark.sql.catalyst.expressions.{DynamicPruning, Expression, PlanExpression}
 import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{GenerateExec, ProjectExec, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, FilterExec,
+  GenerateExec, ProjectExec, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.QueryStageExec
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.datasources.WriteFilesExec
@@ -30,6 +32,18 @@ import org.apache.spark.sql.internal.SQLConf
   * (partition ids would change), and a sort whose input stage contains a
   * `GenerateExec` (Spark's size estimate ignores explode fan-out).
   *
+  * In place: when that bound holds and the sort input is, through
+  * deterministic `ProjectExec`s and `FilterExec`s, a non-bucketed
+  * `FileSourceScanExec` that reads in one partition, the exchange becomes
+  * `CoalesceExec(1)` instead: the scan's one task sorts its own rows, so
+  * the shuffle stage and its job go and no parallelism is lost (the input
+  * had one task either way). The partition count is the scan's own read
+  * RDD, which lists files but runs nothing. Never made in place: a
+  * bucketed or multi-split scan, any other operator between the scan and
+  * the exchange, and a scan with a dynamic-pruning or other subquery
+  * filter (its count would evaluate a runtime filter while planning);
+  * these keep the `SinglePartition` exchange.
+  *
   * A small sorted frame written to files is now one partition, so it
   * writes one file (AQE's coalescing often gave one file already, after
   * the sampling job).
@@ -42,7 +56,9 @@ object SmallFinalSort extends Rule[SparkPlan] {
     case s @ SortExec(_, true,
           e @ ShuffleExchangeExec(_: RangePartitioning, input, ENSURE_REQUIREMENTS, _), _)
         if small(s) && !stageHasGenerate(input) =>
-      s.withNewChildren(Seq(e.copy(outputPartitioning = SinglePartition)))
+      s.withNewChildren(Seq(
+        if (oneSplitScan(input)) CoalesceExec(1, input)
+        else e.copy(outputPartitioning = SinglePartition)))
     case other => other
   }
 
@@ -62,5 +78,23 @@ object SmallFinalSort extends Rule[SparkPlan] {
     case _: GenerateExec => true
     case _: Exchange | _: QueryStageExec => false
     case other => other.children.exists(stageHasGenerate)
+  }
+
+  /** Whether `p` is a one-partition, non-bucketed file scan under
+    * deterministic projects and filters, with no runtime filter anywhere.
+    */
+  private def oneSplitScan(p: SparkPlan): Boolean = p match {
+    case ProjectExec(list, child) => list.forall(static) && oneSplitScan(child)
+    case FilterExec(cond, child) => static(cond) && oneSplitScan(child)
+    case f: FileSourceScanExec =>
+      f.relation.bucketSpec.isEmpty && (f.partitionFilters ++ f.dataFilters).forall(static) &&
+        f.inputRDD.getNumPartitions == 1
+    case _ => false
+  }
+
+  /** Deterministic, with no dynamic-pruning or subquery expression inside. */
+  private def static(e: Expression): Boolean = e.deterministic && !e.exists {
+    case _: DynamicPruning | _: PlanExpression[_] => true
+    case _ => false
   }
 }

@@ -1,8 +1,18 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets.UTF_8
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.csv.{CSVInferSchema, CSVOptions}
+import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFileLinesReader,
+  PartitionDirectory, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, NullType, StringType, StructField, StructType}
 
 /** Source loaders (SURVEY.md §2.1): headered/schema'd CSV scans with glob
   * support, skip-preamble CSV, and generated-projection fixed-width
@@ -13,19 +23,29 @@ import org.apache.spark.sql.types.StructType
 object Csv {
 
   /** Headered CSV scan (S2); `path` may be a glob (S8). Explicit schema
-    * wins over inference (inference costs an extra pass and is
-    * non-deterministic under schema drift).
+    * wins over inference (inference is non-deterministic under schema
+    * drift).
+    *
+    * Without a schema, a one-split input (see [[oneSplitFile]]) has its
+    * header and column types inferred on the driver by Spark's own
+    * pieces, in the order Spark's CSV source applies them, and is then
+    * read with that schema: the same schema `inferSchema` gives, without
+    * the header-line job and the inference job Spark would run for it.
+    * Any other input (several data files, partition subdirectories, a
+    * file Spark would split) keeps Spark's inference.
     */
   def scan(spark: SparkSession, path: String, schema: Option[StructType] = None,
            header: Boolean = true): DataFrame = {
     val r = spark.read.option("header", header.toString)
-    schema match {
+    schema.orElse(oneSplitFile(spark, path).map(inferOnDriver(spark, _, header))) match {
       case Some(s) => r.schema(s).csv(path)
       case None    => r.option("inferSchema", "true").csv(path)
     }
   }
 
-  /** CSV scan with eager timestamp columns (S3, pandas `parse_dates`). */
+  /** CSV scan with eager timestamp columns (S3, pandas `parse_dates`);
+    * the scan is [[scan]]'s, so a one-split file starts no job here.
+    */
   def scanWithDates(spark: SparkSession, path: String, dateCols: Seq[String],
                     fmt: Option[String] = None): DataFrame = {
     val df = scan(spark, path)
@@ -41,15 +61,119 @@ object Csv {
     * `textFile` + `zipWithIndex` (partition order follows file offset),
     * valid for the single-file exports this models; the re-parse is a
     * distributed `csv` over a Dataset[String].
+    *
+    * For a one-split file the header is the first non-empty line after
+    * the preamble, read on the driver; the rest is parsed with
+    * `header=false` and that header's all-string schema (names deduped as
+    * Spark dedupes them), dropping every line equal to the header as
+    * Spark does. A headered `csv` over a Dataset[String] would otherwise
+    * run a job to take that line. Such a file is also read as one text
+    * partition, which Spark's own scan of it would be.
     */
   def skipPreamble(spark: SparkSession, path: String, skip: Int): DataFrame = {
     import spark.implicits._
-    val lines = spark.sparkContext.textFile(path)
+    val sc = spark.sparkContext
+    val head = oneSplitFile(spark, path).flatMap(readLines(spark, _)(firstLine(_, skip)))
+    // a one-split file is read as one text partition, so numbering its
+    // lines needs no job (zipWithIndex runs one to count every partition
+    // but the last)
+    val lines = sc.textFile(path, if (head.isDefined) 1 else sc.defaultMinPartitions)
       .zipWithIndex()
       .filter { case (_, i) => i >= skip }
       .map(_._1)
-    spark.read.option("header", "true").csv(spark.createDataset(lines))
+    head match {
+      case Some(h) =>
+        val names = safeHeader(spark, h, csvOptions(spark, header = true))
+          .getOrElse(Array.empty[String])
+        spark.read.schema(StructType(names.map(StructField(_, StringType))))
+          .csv(spark.createDataset(lines.filter(_ != h)))
+      case None =>
+        spark.read.option("header", "true").csv(spark.createDataset(lines))
+    }
   }
+
+  /** The single data file a CSV read of `path` would scan in ONE task, if
+    * there is one: `path` (a file, a directory or a glob) resolves to
+    * exactly one visible file (Spark's hidden-name rule drops `_SUCCESS`,
+    * `.crc` and the like) with no subdirectory beside it, and that file
+    * is no longer than the split size Spark's scan would cut it at
+    * (`FilePartition.maxSplitBytes` over this one file).
+    */
+  private def oneSplitFile(spark: SparkSession, path: String): Option[FileStatus] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    // Spark's file-listing rule (`HadoopFSUtils.shouldFilterOutPathName`)
+    def hidden(n: String) =
+      ((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+        n.endsWith("._COPYING_")) &&
+        !n.startsWith("_common_metadata") && !n.startsWith("_metadata")
+    def visible(ss: Seq[FileStatus]) = ss.filterNot(s => hidden(s.getPath.getName))
+    val files = visible(Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Nil)) match {
+      case Seq(d) if d.isDirectory => visible(fs.listStatus(d.getPath).toSeq)
+      case matched => matched
+    }
+    files match {
+      case Seq(f) if f.isFile && f.getLen <= FilePartition.maxSplitBytes(spark,
+          Seq(PartitionDirectory(InternalRow.empty, Array(f)))) => Some(f)
+      case _ => None
+    }
+  }
+
+  /** The options Spark's CSV file format builds for an `inferSchema` read. */
+  private def csvOptions(spark: SparkSession, header: Boolean): CSVOptions = {
+    val conf = spark.sessionState.conf
+    new CSVOptions(Map("header" -> header.toString, "inferSchema" -> "true"),
+      conf.csvColumnPruning, conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
+  }
+
+  /** `f` over the lines of `file` as Spark's text scan splits and decodes
+    * them (Hadoop's line reader: LF, CR or CRLF ends a line).
+    */
+  private def readLines[A](spark: SparkSession, file: FileStatus)(f: Iterator[String] => A): A = {
+    val reader = new HadoopFileLinesReader(
+      PartitionedFile(InternalRow.empty, SparkPath.fromPath(file.getPath), 0L, file.getLen),
+      spark.sessionState.newHadoopConf())
+    try f(reader.map(t => new String(t.getBytes, 0, t.getLength, UTF_8)))
+    finally reader.close()
+  }
+
+  /** The line Spark takes as a CSV file's first line: the first one past
+    * `skip` whose SQL `trim` (spaces only) is non-empty.
+    */
+  private def firstLine(lines: Iterator[String], skip: Int): Option[String] =
+    lines.drop(skip).find(_.exists(_ != ' '))
+
+  /** `head`'s fields as column names, made safe as Spark makes them. */
+  private def safeHeader(spark: SparkSession, head: String,
+                         options: CSVOptions): Option[Array[String]] =
+    Option(new CsvParser(options.asParserSettings).parseLine(head)).map(
+      CSVUtils.makeSafeHeader(_, spark.sessionState.conf.caseSensitiveAnalysis, options))
+
+  /** Spark's CSV schema inference (`TextInputCSVDataSource.inferFromDataset`
+    * then `CSVInferSchema.infer`) run on the driver over one file: the same
+    * first line, header names, comment/empty/header-line filters and the
+    * same per-row type fold and merge, so the schema is the one a
+    * one-partition inference job would return.
+    */
+  private def inferOnDriver(spark: SparkSession, file: FileStatus, header: Boolean): StructType =
+    SQLConf.withExistingConf(spark.sessionState.conf) {
+      val options = csvOptions(spark, header)
+      val inferred = for {
+        first <- readLines(spark, file)(firstLine(_, 0))
+        names <- safeHeader(spark, first, options)
+      } yield {
+        val infer = new CSVInferSchema(options)
+        val start = Array.fill[DataType](names.length)(NullType)
+        val types = readLines(spark, file) { lines =>
+          val parser = new CsvParser(options.asParserSettings)
+          CSVUtils.filterHeaderLine(CSVUtils.filterCommentAndEmpty(lines, options), first, options)
+            .map(parser.parseLine)
+            .foldLeft(start.clone())(infer.inferRowType)
+        }
+        StructType(infer.toStructFields(infer.mergeRowTypes(start, types), names))
+      }
+      inferred.getOrElse(StructType(Nil))
+    }
 
   /** HTTP CSV ingestion (S1, `ETL.py:56-77` downloads EIA exports before
     * parsing): fetch each URL to `stagingDir/<name>.csv`, then hand the

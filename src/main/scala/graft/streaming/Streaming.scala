@@ -170,7 +170,7 @@ object Streaming {
   /** Pack (band, 32-bit hash of the band's slots) into one long state
     * key, collision-free across bands by construction. The batch
     * [[graft.dedup.Dedup.minhashCandidates]] keys on the exact band
-    * string instead; here a within-band hash collision only adds one
+    * slots instead; here a within-band hash collision only adds one
     * est-sim comparison against another bucket's representative.
     */
   private def bandBuckets(bands: Int, r: Int) =

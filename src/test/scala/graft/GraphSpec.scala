@@ -179,4 +179,22 @@ class GraphSpec extends AnyFunSuite {
     assert(shuffled === bcast)
     assert(gatedOff === bcast)
   }
+
+  test("coOccurrencePairs returns exactly its own canonical form (the pairsCanonical contract)") {
+    // triangleCounts(pairsCanonical = true), as q139 calls it, skips the
+    // src < dst filter and the distinct: the producer must already be both
+    def canonical(pairs: org.apache.spark.sql.DataFrame) =
+      pairs.filter(col("src") < col("dst")).distinct()
+    def assertCanonical(pairs: org.apache.spark.sql.DataFrame): Unit = {
+      val rows = pairs.collect().toSeq
+      assert(rows.nonEmpty)
+      assert(rows.sortBy(_.toString) === canonical(pairs).collect().toSeq.sortBy(_.toString))
+    }
+    // repeated pairs, reversed pairs and self-pairs across groups
+    val fixture = Seq((1, 3L), (1, 1L), (1, 3L), (1, 2L), (2, 3L), (2, 1L),
+      (3, 2L), (3, 2L), (4, 5L), (5, 9L), (6, 7L), (6, 6L)).toDF("g", "i")
+    assertCanonical(Graph.coOccurrencePairs(fixture, "g", "i"))
+    assertCanonical(Graph.coOccurrencePairs(
+      Tables.lineitem(spark, "perfbench/data/sf0.01"), "l_orderkey", "l_partkey"))
+  }
 }
