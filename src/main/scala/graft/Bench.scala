@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line of per-query seconds. Execution is forced through
@@ -205,33 +204,9 @@ object Bench {
     "q216_ivfpq_tombstoned_index")
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE partition-coalescing floor (round 20, guide §2.2/§2.5): AQE
-      // sizes post-shuffle partitions by BYTES (parallelismFirst respects
-      // the 1 MB default minPartitionSize), which under-parallelizes
-      // stages whose cost is CPU, not I/O — this engine's candidate-pair
-      // verify joins (array_intersect per pair), decimal-exact
-      // aggregations, and unrolled-DP projections carry kilobytes per
-      // multi-second task. Measured round 20 at sf0.1/local[32]: the
-      // q128 prefix-verify chain coalesced to ONE task (5.2 s warm; 2.2 s
-      // at a 64k floor), q170 10.8 -> 6.6 s, q158 7.8 -> 5.5 s, q164
-      // 2.6 -> 1.5 s, flat elsewhere. The floor is parameterized
-      // (SPARK_GRAFT_MIN_PART_SIZE); at production scale post-shuffle
-      // partitions exceed any floor in this range, so the setting is
-      // inert there — it exists so small-BYTE big-CPU stages (a 50 MB
-      // candidate list that needs hours of verify CPU exists at 100 TB
-      // too) keep the cluster's parallelism.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PART_SIZE", "64k"))
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus
+    val spark = Session.build(cpus)
+    val runner = new Runner(spark)
     // Warm the session (JVM, codegen, shuffle machinery, parquet footer
     // cache, noop sink) so the first measured query reflects the query,
     // not startup. The bounded pipeline touches every engine surface the
@@ -294,7 +269,7 @@ object Bench {
     // uncontended box it reads ≈ the single-thread number (each thread
     // does the same work in parallel); above it, sibling pressure.
     def parProbeMs(): Double = {
-      val n = cpus.toInt
+      val n = cpus
       val t0 = System.nanoTime()
       val ts = (0 until n).map { i =>
         val t = new Thread(() => {
@@ -328,7 +303,7 @@ object Bench {
       val bwArr = new Array[Long](32 * 1024 * 1024) // 256 MB
       java.util.Arrays.fill(bwArr, 0x9E3779B97F4A7C15L)
       def bwProbeMs(): Double = {
-        val n = cpus.toInt
+        val n = cpus
         val slice = bwArr.length / n
         val t0 = System.nanoTime()
         val ts = (0 until n).map { i =>
@@ -454,30 +429,14 @@ object Bench {
       var errReps = 0
       val ambience = scala.collection.mutable.ArrayBuffer.empty[(Double, Long)]
       val times = (1 to reps).flatMap { _ =>
-        // Isolate reps/queries from each other's leftovers before
-        // starting the clock. Round 3 showed a uniform +0.5-1.2s drift
-        // on ~20 small queries as the suite grew; round 5 showed a 7.4x
-        // spike on the query following a localCheckpoint-heavy one. Both
-        // trace to ASYNC cleanup (GC-driven ContextCleaner block
-        // removal) landing inside the next query's timed region, so
-        // release everything synchronously here instead:
-        // blocking-unpersist every persistent RDD (this covers
-        // localCheckpoint block pins — they register as cached RDDs),
-        // drop cached plans, then let one explicit GC queue whatever
-        // tiny refs remain (broadcast stubs) for the cleaner.
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        spark.catalog.clearCache()
-        System.gc()
         ambience += ((loadAvg1, memAvailMb))
-        val t0 = System.nanoTime()
-        try {
-          q.impl(spark, sfDir).write.format("noop").mode("overwrite").save()
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch { case e: Throwable =>
-          errReps += 1
-          System.err.println(s"[bench] ${q.name}: $e")
-          None
+        val run = runner(q.impl(spark, sfDir).write.format("noop").mode("overwrite").save())
+        run.result match {
+          case Right(_) => Some(run.seconds)
+          case Left(e) =>
+            errReps += 1
+            System.err.println(s"[bench] ${q.name}: $e")
+            None
         }
       }
       ambience += ((loadAvg1, memAvailMb))

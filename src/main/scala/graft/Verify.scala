@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,21 +9,8 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only: Option[Seq[String]] =
       if (args.length > 2) Some(args(2).split(",").toSeq) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE partition-coalescing floor (round 20, guide §2.2/§2.5): see
-      // the Bench.scala comment — CPU-dense verify/join stages must not
-      // serialize onto one task just because their BYTES are small.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PART_SIZE", "64k"))
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(Session.cpus)
+    val runner = new Runner(spark)
     new java.io.File(outDir).mkdirs()
     // Failed queries must be VISIBLE in the artifacts, not silently absent
     // (round 7 lost 22 broken queries this way: Verify printed to stderr,
@@ -43,9 +29,8 @@ object Verify {
       .map(q => q.name -> q.impl)
       .filter { case (name, _) => only.forall(_.exists(name.contains)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      runner(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name")).result.left.foreach { e =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         errors(name) =
           s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(300)}"

@@ -30,10 +30,7 @@ object Exact {
   /** Deterministic mean: exact sum divided by non-null count (one double op). */
   def davg(c: Column): Column = dsum(c) / count(c)
 
-  /** Windowed variants (e.g. moving averages over ordered frames). */
-  def dsumOver(c: Column, w: WindowSpec): Column =
-    sum(c.cast(CaptureType)).over(w).cast("double")
-
+  /** Windowed mean (e.g. moving averages over ordered frames). */
   def davgOver(c: Column, w: WindowSpec): Column =
     sum(c.cast(CaptureType)).over(w).cast("double") / count(c).over(w)
 

@@ -73,10 +73,6 @@ object Reshape {
   def renameByRegex(df: DataFrame, pattern: String, replacement: String): DataFrame =
     df.toDF(df.columns.map(_.replaceAll(pattern, replacement)).toSeq: _*)
 
-  /** Map-based rename (`ETL.py:309`). */
-  def renameCols(df: DataFrame, m: Map[String, String]): DataFrame =
-    df.withColumnsRenamed(m)
-
   /** Row-wise mean across columns, null-aware (reference `df.mean(axis=1)`,
     * `unsupervised/ts_kmeans_base.ipynb#71`): sum of non-null values over
     * count of non-null values, null if all null.

@@ -8,9 +8,8 @@ import graft.functions.{ExactDotProduct, Md5Hash64, NfcNormalize}
 /** Session extensions registering the engine's native expressions with
   * the SQL function registry, so `spark.sql("SELECT exact_dot(a, b)")`
   * works next to the Column API, and the [[SmallFinalSort]] query-stage
-  * prep rule. Install via
-  * `spark.sql.extensions=graft.plans.GraftExtensions` or
-  * `SparkSession.builder.withExtensions(new GraftExtensions)`.
+  * prep rule. `graft.Session.build` installs them; elsewhere set
+  * `spark.sql.extensions=graft.plans.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -57,40 +57,42 @@ object Csv {
 
   /** Skip-preamble CSV (S4, reference `header=4` EIA export,
     * `normalization.ipynb#6`): drop the first `skip` physical lines, then
-    * parse the remainder as a headered CSV. Line order comes from
-    * `textFile` + `zipWithIndex` (partition order follows file offset),
-    * valid for the single-file exports this models; the re-parse is a
-    * distributed `csv` over a Dataset[String].
+    * parse the remainder as a headered CSV.
     *
-    * For a one-split file the header is the first non-empty line after
-    * the preamble, read on the driver; the rest is parsed with
-    * `header=false` and that header's all-string schema (names deduped as
-    * Spark dedupes them), dropping every line equal to the header as
-    * Spark does. A headered `csv` over a Dataset[String] would otherwise
-    * run a job to take that line. Such a file is also read as one text
-    * partition, which Spark's own scan of it would be.
+    * A one-split file is a text scan in one partition, so its lines are
+    * numbered in file order by `monotonically_increasing_id`. Its header
+    * is the first non-empty line after the preamble, read on the driver;
+    * the rest is parsed by `from_csv` with that header's all-string
+    * schema (names deduped as Spark dedupes them), after the filters
+    * `csv` over a `Dataset[String]` applies: lines whose SQL `trim` is
+    * empty go, and so does every line equal to the header. Building the
+    * frame runs no job, and its plan keeps the file scan's size, so a
+    * small sort over it needs no sampling.
+    *
+    * Any other input numbers its lines with `textFile` + `zipWithIndex`
+    * (partition order follows file offset, valid for the single-file
+    * exports this models) and re-parses them as a distributed headered
+    * `csv` over a Dataset[String].
     */
-  def skipPreamble(spark: SparkSession, path: String, skip: Int): DataFrame = {
-    import spark.implicits._
-    val sc = spark.sparkContext
-    val head = oneSplitFile(spark, path).flatMap(readLines(spark, _)(firstLine(_, skip)))
-    // a one-split file is read as one text partition, so numbering its
-    // lines needs no job (zipWithIndex runs one to count every partition
-    // but the last)
-    val lines = sc.textFile(path, if (head.isDefined) 1 else sc.defaultMinPartitions)
-      .zipWithIndex()
-      .filter { case (_, i) => i >= skip }
-      .map(_._1)
-    head match {
-      case Some(h) =>
+  def skipPreamble(spark: SparkSession, path: String, skip: Int): DataFrame =
+    oneSplitFile(spark, path).flatMap(f => readLines(spark, f)(firstLine(_, skip)).map(f -> _)) match {
+      case Some((file, h)) =>
         val names = safeHeader(spark, h, csvOptions(spark, header = true))
           .getOrElse(Array.empty[String])
-        spark.read.schema(StructType(names.map(StructField(_, StringType))))
-          .csv(spark.createDataset(lines.filter(_ != h)))
+        val line = col("value")
+        spark.read.text(file.getPath.toString)
+          .select(monotonically_increasing_id().as("i"), line)
+          .filter(col("i") >= skip && length(trim(line)) > 0 && line =!= h)
+          .select(from_csv(line, StructType(names.map(StructField(_, StringType))),
+            Map.empty[String, String]).as("r"))
+          .select("r.*")
       case None =>
+        import spark.implicits._
+        val lines = spark.sparkContext.textFile(path).zipWithIndex()
+          .filter { case (_, i) => i >= skip }
+          .map(_._1)
         spark.read.option("header", "true").csv(spark.createDataset(lines))
     }
-  }
 
   /** The single data file a CSV read of `path` would scan in ONE task, if
     * there is one: `path` (a file, a directory or a glob) resolves to

@@ -378,20 +378,6 @@ object TextOps {
   def fingerprint(text: Column): Column =
     md5(regexp_replace(trim(lower(text)), "\\s+", " "))
 
-  /** 64-bit rolling fingerprint (rotate-xor chain) over the canonical
-    * form — cheaper than md5 in tight loops, engine-internal (not
-    * cross-engine stable; see [[fingerprint]] for the oracle-stable
-    * variant). Bitwise ops only: a Horner `acc*31+c` would trip ANSI
-    * overflow checks on any text longer than ~13 chars.
-    */
-  def rollingFingerprint(text: Column): Column = {
-    val canon = regexp_replace(trim(lower(text)), "\\s+", " ")
-    val chars = split(canon, "")
-    aggregate(chars, lit(5381L), (acc, ch) =>
-      shiftleft(acc, 5).bitwiseOR(shiftrightunsigned(acc, 59))
-        .bitwiseXOR(coalesce(ascii(ch).cast("long"), lit(0L))))
-  }
-
   /** Replicates the `trim(lower(text))` the column-expression tokenizer
     * applies, for the UDF twins: Spark's `trim` strips 0x20 SPACES only
     * (Java String.trim also eats tabs/newlines — a real divergence on

@@ -33,12 +33,7 @@ object GoldenGen {
     // impls themselves, so the recorded values are exactly the engine's
     // output; the round-trip k = round(x·10⁹) is exact because the
     // snapped double is the correctly-rounded k/10⁹ and |x| ≪ 2⁴².
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.build(graft.Session.cpus)
     def kd(x: Double): Long = Math.round(x * 1e9)
     val dir = "/root/testdata/sf0.001" // unused by pinned-fixture queries
     val q49 = graft.SparkEntry.queries("q49_arimax_forecast")(spark, dir)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -17,6 +16,8 @@ import org.apache.spark.sql.functions._
   *
   * Run:  sbt "runMain graft.tools.ScaleStress 5000"    (sf0.1-ish)
   *       sbt "runMain graft.tools.ScaleStress 50000"   (10×)
+  * The session is [[graft.Session.build]] at SPARK_GRAFT_CPUS (default
+  * 4); the recorded decades set SPARK_GRAFT_CPUS=32.
   * Emits one JSON line per family:
   *   {"family":…,"n_docs":…,"wall_sec":…,"shuffle_read_mb":…,
   *    "shuffle_write_mb":…,"result_rows":…}
@@ -143,64 +144,27 @@ object ScaleStress {
     // "append"         = index delta-append vs rebuild (1% corpus growth)
     // "serve"          = ANN serving-stream qps/latency/state decade
     val mode = if (args.length > 1) args(1) else "core"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.ui.enabled", "false")
-      // the ann *_bucketed families persist the corpus as a bucketed
-      // TABLE (bucketing metadata lives in the catalog, not the footer)
-      .config("spark.sql.warehouse.dir", "/tmp/graft_stress_warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val read = new java.util.concurrent.atomic.AtomicLong
-    val write = new java.util.concurrent.atomic.AtomicLong
-    val maxTask = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          write.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-        if (t.taskInfo != null)
-          maxTask.getAndAccumulate(t.taskInfo.duration, math.max(_, _))
-      }
-    })
+    val cpus = graft.Session.cpus
+    // the ann *_bucketed families persist the corpus as a bucketed
+    // TABLE (bucketing metadata lives in the catalog, not the footer)
+    val spark = graft.Session.build(cpus, Some("/tmp/graft_stress_warehouse"))
+    val runner = new graft.Runner(spark)
 
     def fmt(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.2f", v)
+    // One family per Runner call: it GCs the previous family's garbage
+    // outside the timed region (without it the next family's first heavy
+    // stage absorbed a full-heap GC: a 2–30 s same-code spread on the
+    // classifier decade, 25–40% of task time in jvmGCTime) and releases
+    // the pins the family made (a predecessor's leaked localCheckpoint
+    // blocks inflated the classifier family 2.1–21 s).
     def run(family: String)(body: => Long): Unit = {
-      // Drop the previous family's leaked pinned blocks before timing:
-      // chains localCheckpoint intermediates they never unpersist (the
-      // ContextCleaner frees them on driver GC, i.e. at an arbitrary
-      // later point), so block-manager pressure from family k inflated
-      // family k+1's wall — observed as a 2.1–21 s same-code spread on
-      // the classifier family until this flush was added.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      // ... and collect the previous family's garbage OUTSIDE the timed
-      // region (the Bench isolation rationale): without this, the next
-      // family's first heavy stage absorbs a full-heap GC of its
-      // predecessor's garbage — measured on the classifier decade as a
-      // 2-30 s same-code wall spread whose slow draws put 25-40% of
-      // task time in jvmGCTime, uniformly across all 32 tasks
-      // (Profile stage histograms, round 15).
-      System.gc()
-      // settle async listener traffic from the previous family
-      Thread.sleep(1500)
-      read.set(0L); write.set(0L); maxTask.set(0L)
-      val t0 = System.nanoTime()
-      val rows = body
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(1500) // let task-end events drain before reading
-      println(s"""{"family":"$family","n_docs":$nDocs,"wall_sec":${fmt(wall)},""" +
-        s""""shuffle_read_mb":${fmt(read.get / 1e6)},""" +
-        s""""shuffle_write_mb":${fmt(write.get / 1e6)},""" +
-        s""""max_task_ms":${maxTask.get},"result_rows":$rows}""")
+      val r = runner(body)
+      val rows = r.value
+      println(s"""{"family":"$family","n_docs":$nDocs,"wall_sec":${fmt(r.seconds)},""" +
+        s""""shuffle_read_mb":${fmt(r.shuffleReadBytes / 1e6)},""" +
+        s""""shuffle_write_mb":${fmt(r.shuffleWriteBytes / 1e6)},""" +
+        s""""max_task_ms":${r.maxTaskMs},"result_rows":$rows}""")
     }
 
     // ---- ANN similarity decade (VERDICT r12 top item) ----
@@ -306,7 +270,7 @@ object ScaleStress {
         }
         del(new java.io.File("/tmp/graft_stress_warehouse/graft_ann_corpus"))
         graft.sources.Csv.bucketedSink(emb, "graft_ann_corpus",
-          Seq("vec_id"), buckets = cpus.toInt)
+          Seq("vec_id"), buckets = cpus)
         def bucketedCorpus = spark.table("graft_ann_corpus")
         val byName = bodies.toMap
         bucketedPairs.foreach { case (bn, base) =>
@@ -329,11 +293,11 @@ object ScaleStress {
         graft.sources.Csv.bucketedSink(
           Similarity.signLshIndex(emb, "vec_id", "embedding",
             dim = dim, bits = 12, tables = 4),
-          "graft_lsh_index", Seq("t", "b"), buckets = cpus.toInt)
+          "graft_lsh_index", Seq("t", "b"), buckets = cpus)
         // corpus table may already exist from the *_bucketed families;
         // (re)write it so this family also runs standalone
         graft.sources.Csv.bucketedSink(emb, "graft_ann_corpus",
-          Seq("vec_id"), buckets = cpus.toInt)
+          Seq("vec_id"), buckets = cpus)
         run("ann_lsh_topk_indexed") {
           Similarity.signLshTopKFromIndex(
             spark.table("graft_lsh_index"),
@@ -359,11 +323,11 @@ object ScaleStress {
         val idx = Similarity.ivfIndex(emb, "vec_id", "embedding",
           nCells = 64)
         graft.sources.Csv.bucketedSink(idx.cells, "graft_ivf_cells",
-          Seq("neighbor_id"), buckets = cpus.toInt)
+          Seq("neighbor_id"), buckets = cpus)
         graft.sources.Csv.bucketedSink(idx.centroids,
           "graft_ivf_centroids", Seq("cell"), buckets = 1)
         graft.sources.Csv.bucketedSink(emb, "graft_ann_corpus",
-          Seq("vec_id"), buckets = cpus.toInt)
+          Seq("vec_id"), buckets = cpus)
         run("ann_ivf_topk_indexed") {
           Similarity.ivfTopKFromIndex(
             spark.table("graft_ivf_cells"),
@@ -636,7 +600,6 @@ object ScaleStress {
     if (mode == "append") {
       val dim = 64
       val deltaN = math.max(1L, nDocs / 100L)
-      val cpusI = cpus.toInt
       def full = annEmbeddings(spark, nDocs + deltaN, dim)
       def base = annEmbeddings(spark, nDocs, dim)
       def delta = full.filter(col("vec_id") >= nDocs)
@@ -649,23 +612,23 @@ object ScaleStress {
         graft.sources.Csv.bucketedSink(
           Similarity.signLshIndex(we, "vec_id", "embedding", dim = dim,
             bits = 12, tables = 4), "graft_append_lsh", Seq("t", "b"),
-          buckets = cpusI)
+          buckets = cpus)
         Similarity.signLshAppend("graft_append_lsh", wd, "vec_id",
-          "embedding", dim = dim, buckets = cpusI, bits = 12, tables = 4)
+          "embedding", dim = dim, buckets = cpus, bits = 12, tables = 4)
         val wi = Similarity.ivfIndex(we, "vec_id", "embedding", nCells = 64)
         graft.sources.Csv.bucketedSink(wi.cells, "graft_append_ivf_cells",
-          Seq("neighbor_id"), buckets = cpusI)
+          Seq("neighbor_id"), buckets = cpus)
         graft.sources.Csv.bucketedSink(wi.centroids,
           "graft_append_ivf_centroids", Seq("cell"), buckets = 1)
         Similarity.ivfAppend("graft_append_ivf_cells",
           spark.table("graft_append_ivf_centroids"), wd,
-          "vec_id", "embedding", buckets = cpusI)
+          "vec_id", "embedding", buckets = cpus)
       }
       run("lsh_index_rebuild") {
         graft.sources.Csv.bucketedSink(
           Similarity.signLshIndex(full, "vec_id", "embedding", dim = dim,
             bits = 12, tables = 4),
-          "graft_append_lsh", Seq("t", "b"), buckets = cpusI)
+          "graft_append_lsh", Seq("t", "b"), buckets = cpus)
         nDocs + deltaN
       }
       // existing index on the base corpus (untimed — it already exists
@@ -673,17 +636,17 @@ object ScaleStress {
       graft.sources.Csv.bucketedSink(
         Similarity.signLshIndex(base, "vec_id", "embedding", dim = dim,
           bits = 12, tables = 4),
-        "graft_append_lsh", Seq("t", "b"), buckets = cpusI)
+        "graft_append_lsh", Seq("t", "b"), buckets = cpus)
       run("lsh_index_append") {
         Similarity.signLshAppend("graft_append_lsh", delta, "vec_id",
-          "embedding", dim = dim, buckets = cpusI, bits = 12, tables = 4)
+          "embedding", dim = dim, buckets = cpus, bits = 12, tables = 4)
         deltaN
       }
       run("ivf_index_rebuild") {
         val idx = Similarity.ivfIndex(full, "vec_id", "embedding",
           nCells = 64)
         graft.sources.Csv.bucketedSink(idx.cells, "graft_append_ivf_cells",
-          Seq("neighbor_id"), buckets = cpusI)
+          Seq("neighbor_id"), buckets = cpus)
         graft.sources.Csv.bucketedSink(idx.centroids,
           "graft_append_ivf_centroids", Seq("cell"), buckets = 1)
         nDocs + deltaN
@@ -691,13 +654,13 @@ object ScaleStress {
       val idxB = Similarity.ivfIndex(base, "vec_id", "embedding",
         nCells = 64)
       graft.sources.Csv.bucketedSink(idxB.cells, "graft_append_ivf_cells",
-        Seq("neighbor_id"), buckets = cpusI)
+        Seq("neighbor_id"), buckets = cpus)
       graft.sources.Csv.bucketedSink(idxB.centroids,
         "graft_append_ivf_centroids", Seq("cell"), buckets = 1)
       run("ivf_index_append") {
         Similarity.ivfAppend("graft_append_ivf_cells",
           spark.table("graft_append_ivf_centroids"), delta,
-          "vec_id", "embedding", buckets = cpusI)
+          "vec_id", "embedding", buckets = cpus)
         deltaN
       }
       // ---- PQ + IVFPQ (round 18: the index families gained the same
@@ -707,7 +670,7 @@ object ScaleStress {
         val idx = Similarity.pqIndex(full, "vec_id", "embedding",
           m = pqM, k = pqK, dim = dim)
         graft.sources.Csv.bucketedSink(idx.codes, "graft_append_pq_codes",
-          Seq("neighbor_id"), buckets = cpusI)
+          Seq("neighbor_id"), buckets = cpus)
         graft.sources.Csv.bucketedSink(idx.codebook, "graft_append_pq_cb",
           Seq("j", "code"), buckets = 1)
         nDocs + deltaN
@@ -715,20 +678,20 @@ object ScaleStress {
       val pqB = Similarity.pqIndex(base, "vec_id", "embedding",
         m = pqM, k = pqK, dim = dim)
       graft.sources.Csv.bucketedSink(pqB.codes, "graft_append_pq_codes",
-        Seq("neighbor_id"), buckets = cpusI)
+        Seq("neighbor_id"), buckets = cpus)
       graft.sources.Csv.bucketedSink(pqB.codebook, "graft_append_pq_cb",
         Seq("j", "code"), buckets = 1)
       run("pq_index_append") {
         Similarity.pqAppend("graft_append_pq_codes",
           spark.table("graft_append_pq_cb"), delta, "vec_id", "embedding",
-          m = pqM, dim = dim, buckets = cpusI)
+          m = pqM, dim = dim, buckets = cpus)
         deltaN
       }
       run("ivfpq_index_rebuild") {
         val idx = Similarity.ivfPqIndex(full, "vec_id", "embedding",
           nCells = 64, m = pqM, k = pqK, dim = dim)
         graft.sources.Csv.bucketedSink(idx.cells, "graft_append_ivfpq_cells",
-          Seq("neighbor_id"), buckets = cpusI)
+          Seq("neighbor_id"), buckets = cpus)
         graft.sources.Csv.bucketedSink(idx.centroids,
           "graft_append_ivfpq_centroids", Seq("cell"), buckets = 1)
         graft.sources.Csv.bucketedSink(idx.codebook,
@@ -738,7 +701,7 @@ object ScaleStress {
       val ipqB = Similarity.ivfPqIndex(base, "vec_id", "embedding",
         nCells = 64, m = pqM, k = pqK, dim = dim)
       graft.sources.Csv.bucketedSink(ipqB.cells, "graft_append_ivfpq_cells",
-        Seq("neighbor_id"), buckets = cpusI)
+        Seq("neighbor_id"), buckets = cpus)
       graft.sources.Csv.bucketedSink(ipqB.centroids,
         "graft_append_ivfpq_centroids", Seq("cell"), buckets = 1)
       graft.sources.Csv.bucketedSink(ipqB.codebook,
@@ -747,7 +710,7 @@ object ScaleStress {
         Similarity.ivfPqAppend("graft_append_ivfpq_cells",
           spark.table("graft_append_ivfpq_centroids"),
           spark.table("graft_append_ivfpq_cb"), delta,
-          "vec_id", "embedding", m = pqM, dim = dim, buckets = cpusI)
+          "vec_id", "embedding", m = pqM, dim = dim, buckets = cpus)
         deltaN
       }
       // ---- delete-from-index (round 20, VERDICT r19 item 2) ----
@@ -851,7 +814,6 @@ object ScaleStress {
     // Third arg: comma-separated input rates, default "64,512".
     if (mode == "serve") {
       val dim = 64; val k = 10
-      val cpusI = cpus.toInt
       val rates = (if (args.length > 2) args(2) else "64,512")
         .split(",").map(_.trim.toInt).toSeq
       // optional fourth arg: comma-separated family substrings (the ann
@@ -873,11 +835,11 @@ object ScaleStress {
       val emb = annEmbeddings(spark, nDocs, dim)
       import graft.sim.Similarity
       graft.sources.Csv.bucketedSink(emb, "graft_serve_corpus",
-        Seq("vec_id"), buckets = cpusI)
+        Seq("vec_id"), buckets = cpus)
       graft.sources.Csv.bucketedSink(
         Similarity.signLshIndex(emb, "vec_id", "embedding", dim = dim,
           bits = 12, tables = 4),
-        "graft_serve_lsh", Seq("t", "b"), buckets = cpusI)
+        "graft_serve_lsh", Seq("t", "b"), buckets = cpus)
       // PRODUCTION-sized quantizer, not the 64-cell bench config: the
       // first serve campaign measured a 123 s batch at nCells = 64 /
       // nProbe = 8 on a 1M corpus — that config probes 12.5% of the
@@ -894,7 +856,7 @@ object ScaleStress {
       val idx = Similarity.ivfIndex(emb, "vec_id", "embedding",
         nCells = serveCells)
       graft.sources.Csv.bucketedSink(idx.cells, "graft_serve_ivf_cells",
-        Seq("neighbor_id"), buckets = cpusI)
+        Seq("neighbor_id"), buckets = cpus)
       graft.sources.Csv.bucketedSink(idx.centroids,
         "graft_serve_ivf_centroids", Seq("cell"), buckets = 1)
       // IVFPQ layout (VERDICT r17 item 1): same quantizer sizing, PQ
@@ -913,7 +875,7 @@ object ScaleStress {
         val pqIdx = Similarity.ivfPqIndex(emb, "vec_id", "embedding",
           nCells = serveCells, m = serveM, k = serveCodes, dim = dim)
         graft.sources.Csv.bucketedSink(pqIdx.cells,
-          "graft_serve_ivfpq_cells", Seq("neighbor_id"), buckets = cpusI)
+          "graft_serve_ivfpq_cells", Seq("neighbor_id"), buckets = cpus)
         graft.sources.Csv.bucketedSink(pqIdx.centroids,
           "graft_serve_ivfpq_centroids", Seq("cell"), buckets = 1)
         graft.sources.Csv.bucketedSink(pqIdx.codebook,
@@ -1048,16 +1010,18 @@ object ScaleStress {
       // force materialization before the stream starts, so each
       // trigger reads cached blocks instead of re-scanning parquet.
       // Centroids/codebook pin implicitly (driver-collected once at
-      // stream build). Blocks unpersist after each family so arms
-      // don't cross-pressure.
-      def pinStatic(df: org.apache.spark.sql.DataFrame)
-          : org.apache.spark.sql.DataFrame = {
-        val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        p.count()
-        p
+      // stream build). The arm unpersists the two frames it pinned when
+      // it ends, so arms don't cross-pressure.
+      def pinnedArm(name: String, rps: Int, table: String)
+                   (stream: (DataFrame, DataFrame) => DataFrame => DataFrame): Unit = {
+        val pinned = Seq(spark.table(table), corpus).map { df =>
+          val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          p.count()
+          p
+        }
+        try serveOne(name, rps)(stream(pinned(0), pinned(1)))
+        finally pinned.foreach(_.unpersist(blocking = true))
       }
-      def unpinAll(): Unit = spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
       // the serve watermark is the dominant e2e-latency term (results
       // emit only after it passes an event time — twice for chained
       // topologies); `SPARK_GRAFT_SERVE_WM` lets the e2e arms sweep it
@@ -1089,29 +1053,18 @@ object ScaleStress {
         if (wantServe("serve_lsh_topk"))
           serveOne("serve_lsh_topk", rps)(
             lshStream(spark.table("graft_serve_lsh"), corpus))
-        if (wantServe("serve_lsh_topk_pinned")) {
-          serveOne("serve_lsh_topk_pinned", rps)(lshStream(
-            pinStatic(spark.table("graft_serve_lsh")), pinStatic(corpus)))
-          unpinAll()
-        }
+        if (wantServe("serve_lsh_topk_pinned"))
+          pinnedArm("serve_lsh_topk_pinned", rps, "graft_serve_lsh")(lshStream)
         if (wantServe("serve_ivf_topk"))
           serveOne("serve_ivf_topk", rps)(
             ivfStream(spark.table("graft_serve_ivf_cells"), corpus))
-        if (wantServe("serve_ivf_topk_pinned")) {
-          serveOne("serve_ivf_topk_pinned", rps)(ivfStream(
-            pinStatic(spark.table("graft_serve_ivf_cells")),
-            pinStatic(corpus)))
-          unpinAll()
-        }
+        if (wantServe("serve_ivf_topk_pinned"))
+          pinnedArm("serve_ivf_topk_pinned", rps, "graft_serve_ivf_cells")(ivfStream)
         if (wantServe("serve_ivfpq_topk"))
           serveOne("serve_ivfpq_topk", rps)(
             ivfPqStream(spark.table("graft_serve_ivfpq_cells"), corpus))
-        if (wantServe("serve_ivfpq_topk_pinned")) {
-          serveOne("serve_ivfpq_topk_pinned", rps)(ivfPqStream(
-            pinStatic(spark.table("graft_serve_ivfpq_cells")),
-            pinStatic(corpus)))
-          unpinAll()
-        }
+        if (wantServe("serve_ivfpq_topk_pinned"))
+          pinnedArm("serve_ivfpq_topk_pinned", rps, "graft_serve_ivfpq_cells")(ivfPqStream)
         // query-to-answer latency arms (VERDICT r18 item 6) — all three
         // families, same protocol, foreachBatch emission clock
         if (wantServe("serve_lsh_e2e"))
@@ -1137,12 +1090,11 @@ object ScaleStress {
     // scan body is a grouping-less aggregate over the vector column —
     // pure scan + file-open cost, the term small files inflate.
     if (mode == "compact") {
-      val cpusI = cpus.toInt
       val appends = if (args.length > 2) args(2).toInt else 50
       val dim = 64
       val emb = annEmbeddings(spark, nDocs, dim)
       graft.sources.Csv.bucketedSink(emb, "graft_compact_corpus",
-        Seq("vec_id"), buckets = cpusI)
+        Seq("vec_id"), buckets = cpus)
       def tableFiles(): Long = {
         val loc = spark.sessionState.catalog.getTableMetadata(
           org.apache.spark.sql.catalyst.TableIdentifier("graft_compact_corpus"))
@@ -1165,7 +1117,7 @@ object ScaleStress {
           graft.sources.Csv.bucketedAppend(
             annEmbeddings(spark, lo + deltaN, dim)
               .filter(col("vec_id") >= lo),
-            "graft_compact_corpus", Seq("vec_id"), buckets = cpusI)
+            "graft_compact_corpus", Seq("vec_id"), buckets = cpus)
         }
         appends.toLong * deltaN
       }

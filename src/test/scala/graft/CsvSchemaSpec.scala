@@ -122,4 +122,32 @@ class CsvSchemaSpec extends AnyFunSuite {
     assert(jobs === 0)
     assert(sparkJobs === 2) // numbering the lines, then taking the header
   }
+
+  test("q95 at sf0.01: the one-split skipPreamble keeps its scan's size, so its sort runs one job fewer") {
+    val dir = Files.createTempDirectory("graft_csv_q95")
+    val region = spark.read.parquet("/root/testdata/sf0.01/region.parquet")
+      .select($"r_regionkey".cast("long"), $"r_name").orderBy("r_regionkey").collect()
+    val header = "r_regionkey,r_name"
+    val path = file(dir, "export.csv", "EIA consumption export\ngenerated: test\n" +
+      "units: none\nsource: graft\n" + header + "\n" +
+      region.map(r => s"${r.getLong(0)},${r.getString(1)}").mkString("\n") + "\n")
+    def sorted(df: DataFrame) =
+      df.select($"r_regionkey".cast("long"), $"r_name").orderBy("r_regionkey")
+    // the Dataset[String] form it replaces: an RDD-backed scan with no size
+    def datasetForm = {
+      val lines = spark.sparkContext.textFile(path, 1).zipWithIndex()
+        .filter { case (_, i) => i >= 4 }.map(_._1).filter(_ != header)
+      spark.read.schema("r_regionkey STRING, r_name STRING").csv(spark.createDataset(lines))
+    }
+    val (got, jobs) = JobCount(spark.sparkContext)(sorted(Csv.skipPreamble(spark, path, 4)).collect())
+    val (want, datasetJobs) = JobCount(spark.sparkContext)(sorted(datasetForm).collect())
+    assert(got.toSeq === want.toSeq)
+    assert(got.toSeq === region.toSeq)
+    assert(jobs === datasetJobs - 1)
+    val q95 = SparkEntry.queries("q95_skip_preamble")(spark, "/root/testdata/sf0.01")
+    assert(q95.collect().toSeq === region.toSeq)
+    val plan = q95.queryExecution.executedPlan.toString
+    assert(!plan.contains("rangepartitioning"), plan)
+  }
 }
+

@@ -5,25 +5,14 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{Coverage, Fills, Lags, Reshape, Splits}
 
-/** Shared local session for all suites (one JVM per sbt test run). */
+/** Shared local session for all suites (one JVM per sbt test run): the
+  * harness configuration at `local[4]`, with a temporary warehouse so
+  * specs that persist bucketed tables (PlanSpec) drop no spark-warehouse
+  * dir into the repo tree.
+  */
 object TestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.ui.enabled", "false")
-      // specs that persist bucketed tables (PlanSpec) must not drop a
-      // spark-warehouse dir into the repo tree
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_test_wh").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session.build(4,
+    Some(java.nio.file.Files.createTempDirectory("graft_test_wh").toString))
 }
 
 class OpsSpec extends AnyFunSuite {
