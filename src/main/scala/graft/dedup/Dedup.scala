@@ -1,9 +1,13 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.immutable.ArraySeq
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.LongType
+import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.{MinHashFamily, ShingleMinHash, ShingleSet, SortedStringIntersectSize}
 import graft.text.TextOps
 
@@ -59,14 +63,6 @@ object Dedup {
         max_by(col("__id"), struct(col("__s"), (-col("__id")).as("n"))).as("keep_id"),
         count(lit(1)).as("n_docs"),
         max(col("__s")).as("best_score"))
-
-  /** The kept rows themselves: full input rows whose id won its group in
-    * [[keepBestGroups]] — a broadcast-or-shuffle semi-join on ids only.
-    */
-  def keepBest(df: DataFrame, idCol: String, textCol: String,
-               scoreCol: String): DataFrame =
-    df.join(keepBestGroups(df, idCol, textCol, scoreCol)
-      .select(col("keep_id").as(idCol)), Seq(idCol), "left_semi")
 
   // -------------------------------------------------------------- minhash
 
@@ -217,10 +213,14 @@ object Dedup {
     * bucket's votes; with several bands true near-dups still collide
     * elsewhere. `Int.MaxValue` (the default) applies no cap and no window.
     *
-    * The band table is referenced on both sides of the self-join and the
-    * candidate table by every consumer; Spark replans (not reuses) each
-    * reference, so both BOUNDED intermediates (ids × bands rows /
-    * candidate pairs) are pinned ([[graft.ops.Pin]]).
+    * This is the distributed route: [[minhashNearDups]] runs it only when
+    * the input has more than [[DriverLimit]] signatures, non-long ids or
+    * more than [[DriverLimit]] bucket pairs, and bands a bounded input on
+    * the driver instead ([[driverCandidates]]). The band table is
+    * referenced on both sides of the self-join and the candidate table by
+    * every consumer; Spark replans (not reuses) each reference, so both
+    * BOUNDED intermediates (ids × bands rows / candidate pairs) are pinned
+    * ([[graft.ops.Pin]]).
     */
   def minhashCandidates(sigs: DataFrame, nHashes: Int, bands: Int,
                         maxBucketSize: Int = Int.MaxValue): DataFrame = {
@@ -264,15 +264,17 @@ object Dedup {
     * and the set sizes are `size()`. Shingles compare as exact strings, as
     * the oracle's `list_distinct` sets do; the single integer-ratio double
     * division is IEEE-identical across engines.
+    *
+    * This is the distributed route, run on [[minhashCandidates]]' pairs;
+    * [[minhashNearDups]]' driver route verifies its pairs with the same
+    * sets and kernel after one collect ([[driverVerify]]).
     */
   def verifyJaccard(cands: DataFrame, df: DataFrame, idCol: String,
                     textCol: String, shingleSize: Int = 3): DataFrame = {
     val candIds = cands
       .select(explode(array(col("id_a"), col("id_b"))).as(idCol)).distinct()
-    val sets = df.join(candIds, Seq(idCol), "left_semi")
-      .select(col(idCol).as("id"),
-        Bridge.column(ShingleSet(Bridge.expression(docTokens(col(textCol))),
-          shingleSize)).as("shs"))
+    val sets = shingleSets(df.join(candIds, Seq(idCol), "left_semi"), idCol, textCol,
+        shingleSize)
       .transform(graft.ops.Pin.pin)
     cands
       .join(sets.select(col("id").as("id_a"), col("shs").as("shs_a")), "id_a")
@@ -287,21 +289,110 @@ object Dedup {
       .select("id_a", "id_b", "n_common", "jaccard")
   }
 
+  /** (id, shs): every doc's distinct shingle strings, sorted by bytes. */
+  private def shingleSets(df: DataFrame, idCol: String, textCol: String,
+                          shingleSize: Int): DataFrame =
+    df.select(col(idCol).as("id"),
+      Bridge.column(ShingleSet(Bridge.expression(docTokens(col(textCol))),
+        shingleSize)).as("shs"))
+
+  /** The bound of [[minhashNearDups]]' driver route, on both the
+    * signature count and the candidate-pair count: the [[dupGroups]] and
+    * DTW-init bound.
+    */
+  val DriverLimit = 100000
+
   /** Banded-LSH near-dup detection end to end: [[minhashSignatures]] →
-    * [[minhashCandidates]] → [[verifyJaccard]], every candidate pair with
-    * its exact Jaccard (filter on `jaccard` for a threshold). Deterministic
-    * at every step. Under `MinHashFamily.Md5` DuckDB replays the whole DAG
+    * LSH candidates → exact Jaccard, every candidate pair with its exact
+    * Jaccard (filter on `jaccard` for a threshold). Deterministic at
+    * every step. Under `MinHashFamily.Md5` DuckDB replays the whole DAG
     * (q80); q44 runs the same DAG under `MinHashFamily.XxHash64` with a
     * bucket cap.
+    *
+    * Two routes, with identical rows. A bounded corpus — long ids, at
+    * most `driverLimit` signatures (fetched by one limit-gated collect,
+    * as [[dupGroups]] fetches its edges) and at most `driverLimit` pairs
+    * summed over its capped buckets — bands and verifies on the driver
+    * ([[driverCandidates]], [[driverVerify]]) and returns a local
+    * relation: one collect of the signatures and one of the candidates'
+    * shingle sets, instead of the distributed route's three pins. Any
+    * other input runs [[minhashCandidates]] → [[verifyJaccard]] from the
+    * same signature frame, recomputing the signatures the gate fetched.
+    * `driverLimit` stays at [[DriverLimit]] outside tests.
     */
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
                       family: MinHashFamily, nHashes: Int, bands: Int,
                       shingleSize: Int = 3,
-                      maxBucketSize: Int = Int.MaxValue): DataFrame =
-    verifyJaccard(
-      minhashCandidates(minhashSignatures(df, idCol, textCol, family, nHashes, shingleSize),
-        nHashes, bands, maxBucketSize),
-      df, idCol, textCol, shingleSize)
+                      maxBucketSize: Int = Int.MaxValue,
+                      driverLimit: Int = DriverLimit): DataFrame = {
+    require(nHashes % bands == 0, "nHashes must divide into bands")
+    val sigs = minhashSignatures(df, idCol, textCol, family, nHashes, shingleSize)
+    val onDriver =
+      if (sigs.schema("id").dataType != LongType) None
+      else {
+        val fetched = sigs.limit(driverLimit + 1).collect()
+        if (fetched.length > driverLimit) None
+        else driverCandidates(fetched, bands, nHashes / bands, maxBucketSize, driverLimit)
+      }
+    onDriver match {
+      case Some(pairs) => driverVerify(pairs, df, idCol, textCol, shingleSize)
+      case None => verifyJaccard(minhashCandidates(sigs, nHashes, bands, maxBucketSize),
+        df, idCol, textCol, shingleSize)
+    }
+  }
+
+  /** [[minhashCandidates]] over collected (id, sig) rows: the distinct
+    * (id_a < id_b) pairs sorted, or None when the capped buckets hold more
+    * than `pairLimit` pairs (counted from bucket sizes, duplicates across
+    * bands included, before any pair is built). Same semantics: a bucket
+    * is a (band, band-slot slice) key, its members ordered by id with
+    * nulls first (the window's ascending order) and cut at `cap`; a null
+    * id takes a cap slot but never pairs.
+    */
+  private def driverCandidates(sigRows: Array[Row], bands: Int, r: Int, cap: Int,
+                               pairLimit: Int): Option[Array[(Long, Long)]] = {
+    val ids = sigRows.map(row => if (row.isNullAt(0)) None else Some(row.getLong(0)))
+    val sigs = sigRows.map(_.getSeq[Long](1).toArray)
+    // one band at a time, so only one band's keys are live
+    val buckets = (0 until bands).flatMap { b =>
+      sigs.indices.groupBy(i => ArraySeq.unsafeWrapArray(sigs(i).slice(b * r, b * r + r)))
+        .valuesIterator.map(members => members.map(ids(_)).sorted.take(cap).flatten)
+        .filter(_.length > 1)
+    }
+    if (buckets.iterator.map(m => m.length.toLong * (m.length - 1) / 2).sum > pairLimit) None
+    else Some(buckets.flatMap(m =>
+        for (i <- m.indices; j <- i + 1 until m.length if m(i) < m(j)) yield (m(i), m(j)))
+      .distinct.sorted.toArray)
+  }
+
+  /** [[verifyJaccard]] on the driver: one collect of the candidate docs'
+    * shingle sets (a semi-join against a local relation of their ids),
+    * then `n_common` by the same [[SortedStringIntersectSize]] kernel and
+    * `jaccard = n_common / (n_a + n_b − n_common)`. Every doc has at
+    * least one shingle, so the denominator is never 0. A pair gets one
+    * row per (id_a row, id_b row) combination, as the inner joins give.
+    */
+  private def driverVerify(pairs: Array[(Long, Long)], df: DataFrame, idCol: String,
+                           textCol: String, shingleSize: Int): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val candIds = pairs.flatMap(p => Seq(p._1, p._2)).distinct.toSeq.toDF(idCol)
+    // binary elements carry the shingles' exact bytes to the driver
+    val sets = shingleSets(df.join(candIds, Seq(idCol), "left_semi"), idCol, textCol,
+        shingleSize)
+      .select(col("id"), col("shs").cast("array<binary>"))
+      .collect().toSeq
+      .groupMap(_.getLong(0))(row => new GenericArrayData(
+        row.getSeq[Array[Byte]](1).map(UTF8String.fromBytes).toArray[Any]): ArrayData)
+    (for {
+      (a, b) <- pairs.toSeq
+      sa <- sets.getOrElse(a, Nil)
+      sb <- sets.getOrElse(b, Nil)
+    } yield {
+      val n = SortedStringIntersectSize.compute(sa, sb)
+      (a, b, n, n.toDouble / (sa.numElements() + sb.numElements() - n))
+    }).toDF("id_a", "id_b", "n_common", "jaccard")
+  }
 
   /** Cross-engine reproducible 64-bit hash: the first 8 md5 digest bytes
     * as a signed long (two's complement). Any engine with md5 can
@@ -350,30 +441,6 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "n_common", "n_a", "n_b", "jaccard")
   }
-
-  /** Asymmetric CONTAINMENT join — the dup relation symmetric Jaccard
-    * structurally misses: a short document swallowed whole by a longer
-    * one (a quoted article inside a commentary page, an abstract inside
-    * its paper) has jaccard ≈ |small|/|large| — arbitrarily low — while
-    * containment = n_common / min(n_a, n_b) is 1.0. The standard metric
-    * for "one side is (nearly) a subset of the other" (Broder's
-    * containment, the relation behind news-wire dedup).
-    *
-    * Same shingle equi-join machinery as [[jaccardPairs]] (reused at
-    * threshold 0 — containment > 0 already requires a shared shingle, so
-    * the candidate set is identical); only the final metric differs.
-    * Output adds `containment`; pairs keep the id_a < id_b convention —
-    * direction recovers from the sizes (the smaller set is the contained
-    * one).
-    */
-  def containmentPairs(df: DataFrame, idCol: String, textCol: String,
-                       shingleSize: Int = 3,
-                       threshold: Double = 0.8): DataFrame =
-    jaccardPairs(df, idCol, textCol, shingleSize, threshold = 0.0)
-      .withColumn("containment",
-        col("n_common").cast("double") / least(col("n_a"), col("n_b")))
-      .filter(col("containment") >= threshold)
-      .select("id_a", "id_b", "n_common", "n_a", "n_b", "containment")
 
   /** EXACT Jaccard similarity join at scale: same output contract as
     * [[jaccardPairs]] (all pairs with n-gram-set jaccard >= threshold),
@@ -474,12 +541,16 @@ object Dedup {
           size(col("ss")).cast("long").as("nsh")))
   }
 
-  /** EXACT containment join at scale: same output contract as
-    * [[containmentPairs]] (all pairs with n_common / min(n_a, n_b) >=
-    * threshold), but candidate generation uses the ASYMMETRIC prefix
-    * filter instead of the full shingle equi-join.
+  /** EXACT containment join at scale: all pairs with Broder containment
+    * n_common / min(n_a, n_b) >= threshold — the subset-dup relation
+    * symmetric Jaccard misses (a short doc swallowed whole by a longer one
+    * has jaccard ≈ |small|/|large| but containment 1.0). Output is
+    * (id_a < id_b, n_common, n_a, n_b, containment); direction recovers
+    * from the sizes. Candidate generation uses the ASYMMETRIC prefix
+    * filter instead of the full shingle equi-join of [[jaccardPairs]] at
+    * threshold 0 (the specs' containment oracle).
     *
-    * Why [[containmentPairs]] cannot reuse the jaccard prefix bound: its
+    * Why containment cannot reuse the jaccard prefix bound: its
     * required overlap t·min(|A|,|B|) depends on the PARTNER's size, so a
     * big doc's own prefix would have to assume the smallest possible
     * partner (length 1) — i.e. the whole doc. The standard asymmetric
@@ -507,10 +578,9 @@ object Dedup {
     * Scale shape: one [[canonicalDocSets]] build (one full-stream
     * shuffle + one per-doc aggregate), a prefix×full equi-join on
     * 64-bit hashes — never text — and a candidate-bounded
-    * array_intersect verify against the |docs|-row set frame. This is
-    * the scale path that upgrades [[containmentPairs]] (kept as the
-    * labeled quadratic oracle baseline) exactly as
-    * [[prefixJaccardPairs]] upgraded [[jaccardPairs]].
+    * array_intersect verify against the |docs|-row set frame — the
+    * scale path for containment, as [[prefixJaccardPairs]] is for
+    * [[jaccardPairs]].
     */
   def prefixContainmentPairs(df: DataFrame, idCol: String, textCol: String,
                              shingleSize: Int = 3,
@@ -989,34 +1059,6 @@ object Dedup {
         col("dup_tokens"),
         (col("n_tokens") - col("dup_tokens")).as("kept_tokens"),
         col("spans_fp"))
-  }
-
-  /** The rewritten documents: tokens covered by any merged duplicate
-    * span are dropped, the rest re-join with single spaces. One row per
-    * input document (docs with no spans pass through re-normalized).
-    *
-    * Scale note: pairing spans with text moves the TEXT through a
-    * doc_id shuffle — the one unavoidable cost of a rewrite pass (any
-    * substring-level dedup pays it exactly once, at output-writing
-    * time); everything upstream of this join still shuffles only
-    * hashes and int pairs. The span side aggregates to one bounded
-    * array row per affected document before the join.
-    */
-  def removeDupSpans(df: DataFrame, idCol: String, textCol: String,
-                     n: Int, minOccur: Int = 2): DataFrame = {
-    val spans = dupSpans(df, idCol, textCol, n, minOccur)
-      .groupBy("doc_id")
-      .agg(array_sort(collect_list(struct(col("s"), col("e"))))
-        .as("__spans"))
-    val base = df.select(col(idCol).as("doc_id"),
-      TextOps.tokens(col(textCol)).as("__toks"))
-    base.join(spans, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        array_join(filter(col("__toks"), (t, i) =>
-          !exists(coalesce(col("__spans"),
-              array().cast("array<struct<s:bigint,e:bigint>>")),
-            sp => sp("s") <= i + 1 && i + 1 <= sp("e"))), " ")
-          .as("cleaned"))
   }
 
   /** One star operation: from each center u with neighborhood Γ(u) and

@@ -13,6 +13,12 @@ object Harness {
   /** M21 ablation (`evaluation.ipynb#24-26`): blocked-CV objective per
     * named feature-group drop. `fitPredict(keptExog)` builds the fold
     * fit/forecast closure for the surviving exog set.
+    *
+    * Every fold is pinned once for the whole ablation, with all exog
+    * columns, and each group reads its kept columns' slice of the
+    * validation exog. Pinning per group cached the same train plan once
+    * per group, so the first group to finish released the entry the
+    * others still read.
     */
   def ablation(series: DataFrame, dateCol: String, targetCol: String,
                exogCols: Seq[String], groups: Map[String, Seq[String]],
@@ -20,12 +26,15 @@ object Harness {
       fitPredict: Seq[String] => (DataFrame, Int, Seq[Array[Double]]) => Array[Double])
     : Map[String, (Double, Double)] =
     sharedFolds(series, dateCol, nSplits, valSize) { folds =>
-      graft.ops.Par.map(groups.toSeq) { case (name, dropped) =>
-        val kept = exogCols.filterNot(dropped.contains)
-        val maes = CvObjective.blockedCvMaeOnFolds(folds, dateCol, targetCol,
-          kept, nSplits)(fitPredict(kept))
+      val fd = CvObjective.foldData(folds, dateCol, targetCol, exogCols, nSplits)
+      try graft.ops.Par.map(groups.toSeq) { case (name, dropped) =>
+        val keptIdx = exogCols.indices.filterNot(i => dropped.contains(exogCols(i)))
+        val kept = keptIdx.map(exogCols)
+        val sliced = fd.map(d => d.copy(exogVal = d.exogVal.map(row => keptIdx.map(row(_)).toArray)))
+        val maes = CvObjective.blockedCvMaeOnFoldData(sliced)(fitPredict(kept))
         name -> CvObjective.summary(maes)
       }.toMap
+      finally CvObjective.releaseFoldData(fd)
     }
 
   /** M20 permutation importance (declared replacement for the reference's

@@ -275,6 +275,78 @@ object Text {
       |  FROM d CROSS JOIN st)""".stripMargin
   }
 
+  /** q158's DAG over `docs` (doc_id, text). `nearDupDriverLimit` is
+    * [[Dedup.minhashNearDups]]' driver-route bound; tests lower it to run
+    * the distributed route.
+    */
+  private[graft] def curationCapstone(docs: org.apache.spark.sql.DataFrame,
+      nearDupDriverLimit: Int = Dedup.DriverLimit): org.apache.spark.sql.DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+    // round 20 (guide §2.3 project-early / §3.3 common-subtree note):
+    // the old DAG referenced the gated quality scan four times (exact
+    // dedup's agg + semi join, the keep-best quality attach, the
+    // curated anti join's left side, the final summary), and Catalyst
+    // replans — and re-RUNS — the documents scan + qualityScore
+    // expression once per textual reference (only exchanges and
+    // subqueries are reused, never scan subtrees). Fold EVERYTHING
+    // the downstream stages need from text (quality, fingerprint,
+    // token count) into ONE scan projection, exact-dedup it, and pin
+    // the survivors as an id/metric frame — text itself is never
+    // pinned or shuffled, so the pinned state is O(rows × ~50 B), the
+    // fingerprint-frame regime the engine already pins everywhere.
+    // Text is scanned three times per run: this pass, the signature
+    // pass over the survivors (an id semi-join) and the shingle-set
+    // pass over the candidate docs only. `exact` is the one pin: up to
+    // Dedup.DriverLimit survivors (and candidate pairs), the near-dup
+    // step collects the signatures once, bands and verifies on the
+    // driver and returns a local relation, so the distributed route's
+    // three pins (banded keys, candidates, shingle sets) do not run;
+    // past that bound they do. The keep rule is min doc_id per
+    // md5(text) among gated rows (rn=1 under orderBy doc_id ⟺ min
+    // doc_id; the oracle's fpd/rn CTE replays it): the struct min
+    // carries the winner's token count and quality along with its id,
+    // so no self semi-join re-derives the winners. dupGroups returns a
+    // materialized frame (a driver LocalRelation or its own pin), so
+    // its output is not pinned again.
+    val exact = graft.ops.Pin.pin(docs
+      .select(col("doc_id"), md5(col("text")).as("__fp"),
+        TextOps.tokenCount(col("text")).as("__ntok"),
+        TextOps.qualityScore(col("text"), stops).as("quality"))
+      .filter(col("quality") >= 0.45)
+      .groupBy("__fp")
+      .agg(min(struct(col("doc_id"), col("__ntok"), col("quality"))).as("__k"))
+      .select(col("__k.doc_id").as("doc_id"), col("__fp"),
+        col("__k.__ntok").as("__ntok"), col("__k.quality").as("quality")))
+    val pairs = Dedup.minhashNearDups(
+        docs.join(exact.select("doc_id"), Seq("doc_id"), "left_semi")
+          .select("doc_id", "text"),
+        "doc_id", "text", MinHashFamily.Md5, nHashes = 16, bands = 4,
+        shingleSize = 3, driverLimit = nearDupDriverLimit)
+      .filter(col("jaccard") >= 0.5)
+      .select("id_a", "id_b")
+    val groups = Dedup.dupGroups(pairs)
+      .select(col("group_id"), col("id").as("doc_id"))
+    val wg = w.partitionBy("group_id").orderBy(col("quality").desc, col("doc_id"))
+    val losers = groups.join(exact.select("doc_id", "quality"), "doc_id")
+      .withColumn("keep_id", first(col("doc_id")).over(wg))
+      .filter(col("doc_id") =!= col("keep_id"))
+      .select("doc_id")
+    // no broadcast hint on `losers`: its size is the near-dup loser
+    // population — data-dependent, unbounded on a crawl-shaped corpus;
+    // AQE picks broadcast-vs-shuffle from the actual runtime size
+    val curated = exact.join(losers, Seq("doc_id"), "left_anti")
+    // every curated row is its fingerprint's only survivor, so a plain
+    // count of __fp is the distinct count (nulls excluded alike)
+    graft.ops.Splits.hashSplit(curated.select("doc_id", "__fp", "__ntok"),
+        "doc_id", "#split", Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
+      .groupBy("split")
+      .agg(count(lit(1)).as("n_docs"),
+        sum(col("__ntok")).as("sum_tokens"),
+        count(col("__fp")).as("n_fp"),
+        min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
+      .orderBy("split")
+  }
+
   val all: Seq[Q] = Seq(
 
     // ---- per-document token statistics (scan-projection only) ----
@@ -2511,66 +2583,7 @@ object Text {
         |  CAST(COUNT(DISTINCT md5(text)) AS BIGINT) AS n_fp,
         |  MIN(doc_id) AS min_id, MAX(doc_id) AS max_id
         |FROM spl GROUP BY split ORDER BY split""".stripMargin) { (s, dir) =>
-      val w = org.apache.spark.sql.expressions.Window
-      val docs = documents(s, dir)
-      // round 20 (guide §2.3 project-early / §3.3 common-subtree note):
-      // the old DAG referenced the gated quality scan four times (exact
-      // dedup's agg + semi join, the keep-best quality attach, the
-      // curated anti join's left side, the final summary), and Catalyst
-      // replans — and re-RUNS — the documents scan + qualityScore
-      // expression once per textual reference (only exchanges and
-      // subqueries are reused, never scan subtrees). Fold EVERYTHING
-      // the downstream stages need from text (quality, fingerprint,
-      // token count) into ONE scan projection, exact-dedup it, and pin
-      // the survivors as an id/metric frame — text itself is never
-      // pinned or shuffled, so the pinned state is O(rows × ~50 B), the
-      // fingerprint-frame regime the engine already pins everywhere.
-      // Text is scanned exactly twice per run: this pass and the
-      // minhash pass over the survivors (an id semi-join), which builds
-      // signatures per document and shingle sets for candidates only.
-      // The keep rule is min doc_id per md5(text) among gated rows (rn=1
-      // under orderBy doc_id ⟺ min doc_id; the oracle's fpd/rn CTE
-      // replays it): the struct min carries the winner's token count and
-      // quality along with its id, so no self semi-join re-derives the
-      // winners. dupGroups returns a materialized frame (a driver
-      // LocalRelation or its own pin), so its output is not pinned again.
-      val exact = graft.ops.Pin.pin(docs
-        .select(col("doc_id"), md5(col("text")).as("__fp"),
-          TextOps.tokenCount(col("text")).as("__ntok"),
-          TextOps.qualityScore(col("text"), stops).as("quality"))
-        .filter(col("quality") >= 0.45)
-        .groupBy("__fp")
-        .agg(min(struct(col("doc_id"), col("__ntok"), col("quality"))).as("__k"))
-        .select(col("__k.doc_id").as("doc_id"), col("__fp"),
-          col("__k.__ntok").as("__ntok"), col("__k.quality").as("quality")))
-      val pairs = Dedup.minhashNearDups(
-          docs.join(exact.select("doc_id"), Seq("doc_id"), "left_semi")
-            .select("doc_id", "text"),
-          "doc_id", "text", MinHashFamily.Md5, nHashes = 16, bands = 4,
-          shingleSize = 3)
-        .filter(col("jaccard") >= 0.5)
-        .select("id_a", "id_b")
-      val groups = Dedup.dupGroups(pairs)
-        .select(col("group_id"), col("id").as("doc_id"))
-      val wg = w.partitionBy("group_id").orderBy(col("quality").desc, col("doc_id"))
-      val losers = groups.join(exact.select("doc_id", "quality"), "doc_id")
-        .withColumn("keep_id", first(col("doc_id")).over(wg))
-        .filter(col("doc_id") =!= col("keep_id"))
-        .select("doc_id")
-      // no broadcast hint on `losers`: its size is the near-dup loser
-      // population — data-dependent, unbounded on a crawl-shaped corpus;
-      // AQE picks broadcast-vs-shuffle from the actual runtime size
-      val curated = exact.join(losers, Seq("doc_id"), "left_anti")
-      // every curated row is its fingerprint's only survivor, so a plain
-      // count of __fp is the distinct count (nulls excluded alike)
-      graft.ops.Splits.hashSplit(curated.select("doc_id", "__fp", "__ntok"),
-          "doc_id", "#split", Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .groupBy("split")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("__ntok")).as("sum_tokens"),
-          count(col("__fp")).as("n_fp"),
-          min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
-        .orderBy("split")
+      curationCapstone(documents(s, dir))
     },
 
     // ---- CDC latest-wins corpus merge (ops/Merge) ----
@@ -3256,7 +3269,7 @@ object Text {
     // Scale shape: lines explode to (doc, source, pos, 16-byte lfp);
     // the recurrence count is a map-side-combined groupBy on
     // (source, lfp); the rewrite regroups kept lines per doc — the one
-    // unavoidable text shuffle, same as removeDupSpans documents.
+    // unavoidable text shuffle of any rewrite pass.
     Q("q174_boilerplate_lines",
       """WITH src AS (
         |  SELECT doc_id, source, text FROM documents
@@ -3555,8 +3568,8 @@ object Text {
     // symmetric query at 0.5) and containment 1.0. Round 20 (guide
     // §2.5/§3): the engine path is the ASYMMETRIC prefix filter
     // (small-side prefix × full ranked stream with the t·min overlap
-    // bound) instead of [[Dedup.containmentPairs]]' full shingle
-    // equi-join at threshold 0 — the hot-shingle m²/2 blow-up q128
+    // bound) instead of the full shingle equi-join of
+    // [[Dedup.jaccardPairs]] at threshold 0 — the hot-shingle m²/2 blow-up q128
     // already removed for jaccard. The oracle still replays the PLAIN
     // equi-join chain, so the hash compare proves the asymmetric
     // prefix loses no qualifying pair (the q128 cross-algorithm

@@ -83,6 +83,31 @@ class BoHarnessSpec extends AnyFunSuite {
     assert(res("no_exog")._1 > res("none")._1, s"ablation: $res")
   }
 
+  test("a two-group ablation pins one cache entry per fold, read by both groups") {
+    val n = 120
+    val series = (0 until n).map(i => (i, 10.0 + 2 * math.sin(i * 0.3) + (i % 5),
+      math.sin(i * 0.3), (i % 5).toDouble)).toDF("t", "y", "x", "z")
+    val trains = java.util.Collections.synchronizedSet(java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[org.apache.spark.sql.DataFrame, java.lang.Boolean]()))
+    val uncachedFits = new java.util.concurrent.atomic.AtomicInteger()
+    def fp(kept: Seq[String]) =
+      (train: org.apache.spark.sql.DataFrame, steps: Int, ex: Seq[Array[Double]]) => {
+        trains.add(train)
+        if (train.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+          uncachedFits.incrementAndGet()
+        assert(ex.forall(_.length == kept.size), s"exog width for $kept")
+        Arimax.fit(train, "t", "y", kept, 1, 0, 0).forecast(steps, ex)
+      }
+    val res = Harness.ablation(series, "t", "y", Seq("x", "z"),
+      Map("none" -> Nil, "no_z" -> Seq("z")), nSplits = 3, valSize = 0.2)(fp)
+    assert(trains.size === 3, "one pinned train frame per fold for both groups")
+    assert(uncachedFits.get === 0, "a fit read a released train frame")
+    // each group's slice scores as its own blocked CV does
+    for ((name, kept) <- Seq("none" -> Seq("x", "z"), "no_z" -> Seq("x")))
+      assert(res(name) === graft.ml.CvObjective.summary(graft.ml.CvObjective.blockedCvMae(
+        series, "t", "y", kept, 3, 0.2)(fp(kept))), name)
+  }
+
   test("learning curve returns one (mean, std) per fraction (M23)") {
     val y = Array.tabulate(100)(i => 10.0 + (i % 4) * 2.0)
     val series = y.toSeq.zipWithIndex.map { case (v, i) => (i, v) }.toDF("t", "y")

@@ -25,9 +25,15 @@ class TextDedupSpec extends AnyFunSuite {
   }
 
   /** q44's near-dup DAG: xxhash64 family, 64 hashes, 16 bands, cap 1000. */
-  private def xxNearDups(docs: org.apache.spark.sql.DataFrame) =
+  private def xxNearDups(docs: org.apache.spark.sql.DataFrame,
+                         driverLimit: Int = Dedup.DriverLimit) =
     Dedup.minhashNearDups(docs, "doc_id", "text", MinHashFamily.XxHash64,
-      nHashes = 64, bands = 16, maxBucketSize = 1000)
+      nHashes = 64, bands = 16, maxBucketSize = 1000, driverLimit = driverLimit)
+
+  /** minhashNearDups' gate at its default (the driver route for these
+    * fixtures) and at 0 (the distributed route).
+    */
+  private val routes = Seq(Dedup.DriverLimit, 0)
 
   test("dupGroups closes components: clique, chain, isolated pair (both paths)") {
     // clique {1,2,3}, a 5-node CHAIN 10-11-12-13-14 (diameter 4 — needs
@@ -290,7 +296,7 @@ class TextDedupSpec extends AnyFunSuite {
     val g = groups.find(_.getAs[Long]("n_docs") == 3L).get
     assert(g.getAs[Long]("keep_id") === 2L)
     assert(g.getAs[Double]("best_score") === 0.9)
-    val kept = Dedup.keepBest(df, "doc_id", "text", "q")
+    val kept = ReferenceForms.keepBest(df, "doc_id", "text", "q")
       .select("doc_id").as[Long].collect().sorted
     assert(kept.toSeq === Seq(2L, 3L, 5L))
   }
@@ -307,21 +313,26 @@ class TextDedupSpec extends AnyFunSuite {
   }
 
   test("minhash near-dup final plan reads pinned intermediates, not re-derived shingles") {
-    // Banding and candidates are localCheckpoint-pinned in minhashCandidates
-    // and verifyJaccard shingles only candidate docs into another pinned
-    // table — so the FINAL plan must be joins over materialized RDD scans
-    // with no shingle/hash re-derivation left in it (the pre-round-4 plan
-    // re-ran those subtrees once per reference).
+    // Distributed route (gate 0): banding and candidates are
+    // localCheckpoint-pinned in minhashCandidates and verifyJaccard
+    // shingles only candidate docs into another pinned table — so the
+    // FINAL plan must be joins over materialized RDD scans with no
+    // shingle/hash re-derivation left in it (the pre-round-4 plan re-ran
+    // those subtrees once per reference). The driver route's final plan
+    // is one local relation.
     val base = mkDoc(7, 120)
     val nearDup = base.split(" ").updated(5, "changed").mkString(" ")
     val docs = (Seq((0L, base), (1L, nearDup)) ++
       (2L to 9L).map(i => (i, mkDoc(100 + i.toInt, 120)))).toDF("doc_id", "text")
-    val out = xxNearDups(docs).filter(col("jaccard") >= 0.7)
+    val out = xxNearDups(docs, driverLimit = 0).filter(col("jaccard") >= 0.7)
     val plan = out.queryExecution.optimizedPlan.toString
     assert(!plan.contains("posexplode"), s"shingle generation re-derived:\n$plan")
     assert(!plan.contains("xxhash64"), s"shingle hashing re-derived:\n$plan")
     assert("LogicalRDD".r.findAllMatchIn(plan).size >= 2,
       s"expected pinned RDD scans in:\n$plan")
+    val local = xxNearDups(docs).filter(col("jaccard") >= 0.7).queryExecution.optimizedPlan
+    assert(local.collectLeaves().forall(_.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation]), s"driver route plan:\n$local")
   }
 
   test("minhash est-sim is an unbiased Jaccard estimator, not min-shingle-correlated") {
@@ -393,17 +404,20 @@ class TextDedupSpec extends AnyFunSuite {
     val wantTable = md5TablePin.stripMargin.trim.split("\\s+#").map(_.stripPrefix("#"))
       .map(rec => "#" + rec.split("\\s+").mkString(" ")).mkString("\n")
     assert(gotTable === wantTable)
-    def pairs(threshold: Double) =
-      Dedup.minhashNearDups(md5Corpus, "doc_id", "text", MinHashFamily.Md5, 16, bands = 4)
-        .filter(col("jaccard") >= threshold)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          java.lang.Double.doubleToLongBits(r.getDouble(3)))).sorted.toSeq
-    val at05 = pairs(0.5)
-    assert(at05 === md5PairsPin)
-    // 12-13 and 11-13 (J = 25/51) are candidates the threshold drops
-    assert(pairs(0.45).diff(at05) === Seq(
-      (11L, 13L, 25L, java.lang.Double.doubleToLongBits(25.0 / 51)),
-      (12L, 13L, 25L, java.lang.Double.doubleToLongBits(25.0 / 51))))
+    for (limit <- routes) {
+      def pairs(threshold: Double) =
+        Dedup.minhashNearDups(md5Corpus, "doc_id", "text", MinHashFamily.Md5, 16, bands = 4,
+            driverLimit = limit)
+          .filter(col("jaccard") >= threshold)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+            java.lang.Double.doubleToLongBits(r.getDouble(3)))).sorted.toSeq
+      val at05 = pairs(0.5)
+      assert(at05 === md5PairsPin, s"driverLimit = $limit")
+      // 12-13 and 11-13 (J = 25/51) are candidates the threshold drops
+      assert(pairs(0.45).diff(at05) === Seq(
+        (11L, 13L, 25L, java.lang.Double.doubleToLongBits(25.0 / 51)),
+        (12L, 13L, 25L, java.lang.Double.doubleToLongBits(25.0 / 51))), s"driverLimit = $limit")
+    }
   }
 
   test("md5 MinHash signatures are bit-identical over repartition(7) input") {
@@ -459,11 +473,13 @@ class TextDedupSpec extends AnyFunSuite {
     }
     // doc 1 (null) is not read as "": it pairs with no doc, not even the
     // empty doc 2, and every other candidate row is unchanged
-    val got = xxNearDups(md5Corpus)
-      .select("id_a", "id_b", "jaccard").collect()
-      .map(r => (r.getLong(0), r.getLong(1),
-        java.lang.Double.doubleToLongBits(r.getDouble(2)))).sorted.toSeq
-    assert(got === xxPairsPin)
+    for (limit <- routes) {
+      val got = xxNearDups(md5Corpus, limit)
+        .select("id_a", "id_b", "jaccard").collect()
+        .map(r => (r.getLong(0), r.getLong(1),
+          java.lang.Double.doubleToLongBits(r.getDouble(2)))).sorted.toSeq
+      assert(got === xxPairsPin, s"driverLimit = $limit")
+    }
   }
 
   // (id_a, id_b, n_common, doubleToLongBits(jaccard)): 1.0, 7/9 and 26/50
@@ -568,11 +584,71 @@ class TextDedupSpec extends AnyFunSuite {
       assert(got === want, s"numHashes = $numHashes")
     }
     // q44's DAG: 64 hashes, 16 bands, bucket cap 1000, every candidate
-    val got = xxNearDups(xxCorpus)
-      .select("id_a", "id_b", "jaccard").collect()
-      .map(r => (r.getLong(0), r.getLong(1),
-        java.lang.Double.doubleToLongBits(r.getDouble(2)))).sorted.toSeq
-    assert(got === xxPairsPin)
+    for (limit <- routes) {
+      val got = xxNearDups(xxCorpus, limit)
+        .select("id_a", "id_b", "jaccard").collect()
+        .map(r => (r.getLong(0), r.getLong(1),
+          java.lang.Double.doubleToLongBits(r.getDouble(2)))).sorted.toSeq
+      assert(got === xxPairsPin, s"driverLimit = $limit")
+    }
+  }
+
+  /** Every row of minhashNearDups (md5 family, 16 hashes, 4 bands), sorted,
+    * with its jaccard as bits.
+    */
+  private def md5Rows(docs: org.apache.spark.sql.DataFrame, cap: Int, limit: Int) =
+    Dedup.minhashNearDups(docs, "doc_id", "text", MinHashFamily.Md5, 16, bands = 4,
+        maxBucketSize = cap, driverLimit = limit)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        java.lang.Double.doubleToLongBits(r.getDouble(3)))).sorted.toSeq
+
+  private def isLocal(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.collectLeaves().forall(_.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+
+  test("a binding bucket cap keeps the same smallest ids on both routes; null ids never pair") {
+    // six copies of one text share every bucket, with a null-id copy
+    // that sorts first and takes a cap slot; 20 and 21 are a near-dup
+    // pair with different band keys in some bands
+    val base = mkDoc(11, 60)
+    val near = mkDoc(7, 120)
+    val docs = (Seq[(Option[Long], String)]((None, base)) ++
+        (1L to 6L).map(i => (Some(i), base)) ++
+        Seq((Some(20L), near),
+          (Some(21L), near.split(" ").updated(5, "changed").mkString(" ")),
+          (Some(30L), mkDoc(12, 60)), (None, mkDoc(13, 60))))
+      .toDF("doc_id", "text")
+    val byRoute = routes.map(limit => md5Rows(docs, cap = 3, limit))
+    assert(byRoute.distinct.size === 1, s"routes differ: $byRoute")
+    // cap 3 keeps (null, 1, 2) of the copies' buckets: one pair, not 15
+    val copies = byRoute.head.filter(_._2 <= 6L)
+    assert(copies.map(p => (p._1, p._2)) === Seq((1L, 2L)), s"capped rows: $copies")
+    assert(byRoute.head.exists(p => p._1 == 20L && p._2 == 21L), s"rows: ${byRoute.head}")
+    assert(md5Rows(docs, Int.MaxValue, Dedup.DriverLimit).count(_._2 <= 6L) === 15)
+  }
+
+  test("a corpus over the pair-count gate runs the distributed route, with the same rows") {
+    // 30 copies of one text: 4 bands × C(30, 2) = 1740 bucket pairs,
+    // 30 signatures
+    val docs = (1L to 30L).map(i => (i, mkDoc(14, 40))).toDF("doc_id", "text")
+    def out(limit: Int) = Dedup.minhashNearDups(docs, "doc_id", "text", MinHashFamily.Md5,
+      16, bands = 4, driverLimit = limit)
+    assert(!isLocal(out(1000)), "1740 bucket pairs > 1000 must leave the driver route")
+    assert(isLocal(out(1740)), "1740 bucket pairs <= 1740 stay on the driver")
+    val want = md5Rows(docs, Int.MaxValue, 0)
+    assert(want.size === 435)
+    for (limit <- Seq(1000, 1740)) assert(md5Rows(docs, Int.MaxValue, limit) === want)
+  }
+
+  test("q158 runs at least 6 fewer jobs on the driver route than on the distributed one (sf0.001)") {
+    import org.apache.spark.graft.JobCount
+    val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
+    def run(limit: Int) = JobCount(spark.sparkContext)(
+      graft.queries.Text.curationCapstone(docs, limit).collect().toSeq)
+    val (distRows, distJobs) = run(0)
+    val (rows, jobs) = run(Dedup.DriverLimit)
+    assert(rows === distRows)
+    assert(jobs <= distJobs - 6, s"driver route $jobs jobs, distributed $distJobs")
   }
 
   private val xxSig64Pin: Map[Long, String] = Map(
@@ -741,7 +817,7 @@ class TextDedupSpec extends AnyFunSuite {
     assert(byDoc(1L) === ((8L, 1L, 5L, 3L)))   // 8 tokens, 1 span, 5 dup, 3 kept
     assert(byDoc(2L) === ((12L, 2L, 9L, 3L)))  // 12 tokens, 2 spans, 9 dup, 3 kept
 
-    val cleaned = Dedup.removeDupSpans(docs, "doc_id", "text", n = 3)
+    val cleaned = ReferenceForms.removeDupSpans(docs, "doc_id", "text", n = 3)
       .orderBy("doc_id").as[(Long, String)].collect().toMap
     assert(cleaned(1L) === "f g h")
     assert(cleaned(2L) === "x y z")
@@ -753,7 +829,7 @@ class TextDedupSpec extends AnyFunSuite {
       .parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text")
     val stats = Dedup.dupSpanStats(docs, "doc_id", "text", n = 4)
-    val cleaned = Dedup.removeDupSpans(docs, "doc_id", "text", n = 4)
+    val cleaned = ReferenceForms.removeDupSpans(docs, "doc_id", "text", n = 4)
       .select(col("doc_id"),
         when(col("cleaned") === "", 0L)
           .otherwise(size(split(col("cleaned"), " ")).cast("long"))
@@ -1067,7 +1143,7 @@ class IvfSkewSpec extends org.scalatest.funsuite.AnyFunSuite {
       (3L, "x y z w v"),               // disjoint
       (4L, "a b c d e f g h i j"))     // exact dup of 1
       .toDF("doc_id", "text")
-    val got = Dedup.containmentPairs(docs, "doc_id", "text", 3, 0.8)
+    val got = ReferenceForms.containmentPairs(docs, "doc_id", "text", 3, 0.8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(5))).toSet
     // (1,2): containment 3/3 = 1.0 but jaccard 3/8 — found here, invisible
     // to jaccardPairs at 0.5; (1,4): both metrics 1.0; nothing touches 3
@@ -1103,7 +1179,7 @@ class IvfSkewSpec extends org.scalatest.funsuite.AnyFunSuite {
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
         r.getDouble(5))
     for (t <- Seq(0.5, 0.8, 0.9, 1.0)) {
-      val exact = Dedup.containmentPairs(docs, "doc_id", "text", 3, t)
+      val exact = ReferenceForms.containmentPairs(docs, "doc_id", "text", 3, t)
         .collect().map(key).toSet
       val pref = Dedup.prefixContainmentPairs(docs, "doc_id", "text", 3, t)
         .collect().map(key).toSet
@@ -1129,7 +1205,7 @@ class IvfSkewSpec extends org.scalatest.funsuite.AnyFunSuite {
       .toDF("doc_id", "text")
     assert(Dedup.prefixContainmentPairs(docs, "doc_id", "text", 3, 0.8)
       .count() === 0L)
-    assert(Dedup.containmentPairs(docs, "doc_id", "text", 3, 0.8)
+    assert(ReferenceForms.containmentPairs(docs, "doc_id", "text", 3, 0.8)
       .count() === 0L)
   }
 
