@@ -1,7 +1,10 @@
 package graft.dedup
 
 import scala.collection.immutable.ArraySeq
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan, Project,
+  RepartitionOperation, Sample, Sort, SubqueryAlias}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -214,13 +217,13 @@ object Dedup {
     * elsewhere. `Int.MaxValue` (the default) applies no cap and no window.
     *
     * This is the distributed route: [[minhashNearDups]] runs it only when
-    * the input has more than [[DriverLimit]] signatures, non-long ids or
-    * more than [[DriverLimit]] bucket pairs, and bands a bounded input on
-    * the driver instead ([[driverCandidates]]). The band table is
-    * referenced on both sides of the self-join and the candidate table by
-    * every consumer; Spark replans (not reuses) each reference, so both
-    * BOUNDED intermediates (ids × bands rows / candidate pairs) are pinned
-    * ([[graft.ops.Pin]]).
+    * the input has non-long ids, more source rows or minhashes than its
+    * [[DriverLimit]] bound or more than [[DriverLimit]] bucket pairs, and
+    * bands a bounded input on the driver instead ([[driverCandidates]]).
+    * The band table is referenced on both sides of the self-join and the
+    * candidate table by every consumer; Spark replans (not reuses) each
+    * reference, so both BOUNDED intermediates (ids × bands rows /
+    * candidate pairs) are pinned ([[graft.ops.Pin]]).
     */
   def minhashCandidates(sigs: DataFrame, nHashes: Int, bands: Int,
                         maxBucketSize: Int = Int.MaxValue): DataFrame = {
@@ -296,9 +299,11 @@ object Dedup {
       Bridge.column(ShingleSet(Bridge.expression(docTokens(col(textCol))),
         shingleSize)).as("shs"))
 
-  /** The bound of [[minhashNearDups]]' driver route, on both the
-    * signature count and the candidate-pair count: the [[dupGroups]] and
-    * DTW-init bound.
+  /** The bound of [[minhashNearDups]]' driver route: at most this many
+    * candidate pairs, and at most this many signatures holding at most
+    * 16 × this many minhashes (100,000 signatures of 16 hashes, 25,000 of
+    * 64). The [[dupGroups]] and DTW-init bound; the minhash bound keeps
+    * the driver's signature heap at that of the 16-hash shape.
     */
   val DriverLimit = 100000
 
@@ -309,16 +314,21 @@ object Dedup {
     * (q80); q44 runs the same DAG under `MinHashFamily.XxHash64` with a
     * bucket cap.
     *
-    * Two routes, with identical rows. A bounded corpus — long ids, at
-    * most `driverLimit` signatures (fetched by one limit-gated collect,
-    * as [[dupGroups]] fetches its edges) and at most `driverLimit` pairs
-    * summed over its capped buckets — bands and verifies on the driver
-    * ([[driverCandidates]], [[driverVerify]]) and returns a local
-    * relation: one collect of the signatures and one of the candidates'
-    * shingle sets, instead of the distributed route's three pins. Any
-    * other input runs [[minhashCandidates]] → [[verifyJaccard]] from the
-    * same signature frame, recomputing the signatures the gate fetched.
-    * `driverLimit` stays at [[DriverLimit]] outside tests.
+    * Two routes, with identical rows. The gate first counts, up to the
+    * bound, the rows of the input's source ([[rowSource]]: no signature is
+    * computed and the input's semi-joins do not run). An input of long
+    * ids whose source holds at most `driverLimit` rows, and at most
+    * 16 × `driverLimit` minhashes at `nHashes` per row, has its
+    * signatures fetched by one collect; if their capped buckets
+    * hold at most `driverLimit` pairs, they are banded and verified on the
+    * driver ([[driverCandidates]], [[driverVerify]]) and the result is a
+    * local relation: one collect of the signatures and one of the
+    * candidates' shingle sets, instead of the distributed route's three
+    * pins. Any other input runs [[minhashCandidates]] →
+    * [[verifyJaccard]] from the same signature frame: past the row bound
+    * after the count alone, past the pair bound after recomputing the
+    * signatures it fetched. `driverLimit` stays at [[DriverLimit]]
+    * outside tests.
     */
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
                       family: MinHashFamily, nHashes: Int, bands: Int,
@@ -327,18 +337,40 @@ object Dedup {
                       driverLimit: Int = DriverLimit): DataFrame = {
     require(nHashes % bands == 0, "nHashes must divide into bands")
     val sigs = minhashSignatures(df, idCol, textCol, family, nHashes, shingleSize)
+    val maxSigs = math.min(driverLimit, driverLimit.toLong * 16 / nHashes).toInt
     val onDriver =
-      if (sigs.schema("id").dataType != LongType) None
+      if (sigs.schema("id").dataType != LongType ||
+          rowSource(df).select(lit(1)).limit(maxSigs + 1).collect().length > maxSigs) None
       else {
-        val fetched = sigs.limit(driverLimit + 1).collect()
-        if (fetched.length > driverLimit) None
-        else driverCandidates(fetched, bands, nHashes / bands, maxBucketSize, driverLimit)
+        import df.sparkSession.implicits._
+        // primitive long arrays: no boxed minhash reaches the driver heap
+        driverCandidates(sigs.as[(Option[Long], Array[Long])].collect(), bands,
+          nHashes / bands, maxBucketSize, driverLimit)
       }
     onDriver match {
       case Some(pairs) => driverVerify(pairs, df, idCol, textCol, shingleSize)
       case None => verifyJaccard(minhashCandidates(sigs, nHashes, bands, maxBucketSize),
         df, idCol, textCol, shingleSize)
     }
+  }
+
+  /** A frame with at least as many rows as `df` and cheaper to run: `df`'s
+    * plan below its top operators that never add rows: projections,
+    * filters, samples, sorts, repartitions, and semi- and anti-joins, of
+    * which it keeps the left side.
+    */
+  private def rowSource(df: DataFrame): DataFrame = {
+    def source(p: LogicalPlan): LogicalPlan = p match {
+      case Project(_, child) => source(child)
+      case Filter(_, child) => source(child)
+      case SubqueryAlias(_, child) => source(child)
+      case s: Sample => source(s.child)
+      case s: Sort => source(s.child)
+      case r: RepartitionOperation => source(r.child)
+      case j: Join if j.joinType == LeftSemi || j.joinType == LeftAnti => source(j.left)
+      case other => other
+    }
+    Bridge.frame(df.sparkSession, source(df.queryExecution.optimizedPlan))
   }
 
   /** [[minhashCandidates]] over collected (id, sig) rows: the distinct
@@ -349,14 +381,12 @@ object Dedup {
     * nulls first (the window's ascending order) and cut at `cap`; a null
     * id takes a cap slot but never pairs.
     */
-  private def driverCandidates(sigRows: Array[Row], bands: Int, r: Int, cap: Int,
-                               pairLimit: Int): Option[Array[(Long, Long)]] = {
-    val ids = sigRows.map(row => if (row.isNullAt(0)) None else Some(row.getLong(0)))
-    val sigs = sigRows.map(_.getSeq[Long](1).toArray)
+  private def driverCandidates(sigs: Array[(Option[Long], Array[Long])], bands: Int, r: Int,
+                               cap: Int, pairLimit: Int): Option[Array[(Long, Long)]] = {
     // one band at a time, so only one band's keys are live
     val buckets = (0 until bands).flatMap { b =>
-      sigs.indices.groupBy(i => ArraySeq.unsafeWrapArray(sigs(i).slice(b * r, b * r + r)))
-        .valuesIterator.map(members => members.map(ids(_)).sorted.take(cap).flatten)
+      sigs.indices.groupBy(i => ArraySeq.unsafeWrapArray(sigs(i)._2.slice(b * r, b * r + r)))
+        .valuesIterator.map(members => members.map(sigs(_)._1).sorted.take(cap).flatten)
         .filter(_.length > 1)
     }
     if (buckets.iterator.map(m => m.length.toLong * (m.length - 1) / 2).sum > pairLimit) None

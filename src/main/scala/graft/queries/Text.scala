@@ -275,9 +275,10 @@ object Text {
       |  FROM d CROSS JOIN st)""".stripMargin
   }
 
-  /** q158's DAG over `docs` (doc_id, text). `nearDupDriverLimit` is
-    * [[Dedup.minhashNearDups]]' driver-route bound; tests lower it to run
-    * the distributed route.
+  /** q158's DAG over `docs` (doc_id, text). `nearDupDriverLimit` exists
+    * for tests only: it is passed on as [[Dedup.minhashNearDups]]'
+    * `driverLimit`, which tests lower to 0 to run q158 on the distributed
+    * route. q158 itself takes the default, and no caller should tune it.
     */
   private[graft] def curationCapstone(docs: org.apache.spark.sql.DataFrame,
       nearDupDriverLimit: Int = Dedup.DriverLimit): org.apache.spark.sql.DataFrame = {
@@ -296,9 +297,10 @@ object Text {
     // fingerprint-frame regime the engine already pins everywhere.
     // Text is scanned three times per run: this pass, the signature
     // pass over the survivors (an id semi-join) and the shingle-set
-    // pass over the candidate docs only. `exact` is the one pin: up to
-    // Dedup.DriverLimit survivors (and candidate pairs), the near-dup
-    // step collects the signatures once, bands and verifies on the
+    // pass over the candidate docs only. `exact` is the one pin: while
+    // the documents scan holds up to Dedup.DriverLimit rows (and the
+    // candidates as many pairs), the near-dup step counts the scan's
+    // rows, collects the signatures once, bands and verifies on the
     // driver and returns a local relation, so the distributed route's
     // three pins (banded keys, candidates, shingle sets) do not run;
     // past that bound they do. The keep rule is min doc_id per

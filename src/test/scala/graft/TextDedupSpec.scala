@@ -640,6 +640,34 @@ class TextDedupSpec extends AnyFunSuite {
     for (limit <- Seq(1000, 1740)) assert(md5Rows(docs, Int.MaxValue, limit) === want)
   }
 
+  test("the gate counts the input's source rows, below its semi-joins") {
+    val all = (1L to 30L).map(i => (i, mkDoc(if (i > 28) 1 else i.toInt, 40)))
+      .toDF("doc_id", "text")
+    // 20 rows survive the semi-join, out of a 30-row source
+    val docs = all.join((1L to 30L).filter(_ % 3 != 0).toDF("doc_id"), Seq("doc_id"),
+      "left_semi")
+    assert(docs.count() === 20)
+    assert(!isLocal(Dedup.minhashNearDups(docs, "doc_id", "text", MinHashFamily.Md5, 16,
+      bands = 4, driverLimit = 29)), "a 30-row source > 29 must leave the driver route")
+    assert(isLocal(Dedup.minhashNearDups(docs, "doc_id", "text", MinHashFamily.Md5, 16,
+      bands = 4, driverLimit = 30)), "a 30-row source <= 30 stays on the driver")
+    assert(md5Rows(docs, Int.MaxValue, 29) === md5Rows(docs, Int.MaxValue, 30))
+    assert(md5Rows(docs, Int.MaxValue, 30).exists(p => p._1 == 1L && p._2 == 29L))
+  }
+
+  test("the driver route's row bound shrinks with the hash count: 64 hashes get a quarter of the rows") {
+    // 30 docs of 64 hashes: 1920 minhashes, the 16-hash shape of 120 rows;
+    // docs 29 and 30 copy doc 1, so the 16 bands hold at least 48 pairs
+    val docs = (1L to 30L).map(i => (i, mkDoc(if (i > 28) 1 else i.toInt, 40)))
+      .toDF("doc_id", "text")
+    def rows(limit: Int) = xxNearDups(docs, limit).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
+    assert(!isLocal(xxNearDups(docs, 119)), "1920 minhashes > 16 × 119 must leave the driver route")
+    assert(isLocal(xxNearDups(docs, 120)), "1920 minhashes <= 16 × 120 stay on the driver")
+    assert(rows(119) === rows(120))
+    assert(rows(120).nonEmpty)
+  }
+
   test("q158 runs at least 6 fewer jobs on the driver route than on the distributed one (sf0.001)") {
     import org.apache.spark.graft.JobCount
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
